@@ -8,7 +8,8 @@ package graft
   * `queryExecution.toRdd.foreach` — a plain `.count()` would let Catalyst
   * prune expression-heavy projections (dedup signatures, text stats) and
   * under-measure them. Failures are recorded per-query (negative time
-  * sentinel, excluded from the total) instead of being silently summed.
+  * sentinel, excluded from the total, counted in `n_failed`) and make
+  * the run exit with status 1 after both JSON lines are written.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -76,13 +77,14 @@ object Bench {
     // (a) per-query values are rounded to 2dp to fit the whole line in
     // the window, and (b) the summary fields (value = total seconds)
     // come AFTER the queries map so they survive even if the head is
-    // clipped. Full-precision numbers go to BENCH_FULL.json in cwd.
+    // clipped. Full-precision numbers go to $SPARK_GRAFT_BENCH_OUT
+    // (default: the gitignored BENCH_LAST.json in cwd).
     def fmt(v: Double, dp: Int) = BigDecimal(v).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toString
     def qsJson(dp: Int) = results.map { case (k, v) => "\"" + k + "\":" + fmt(v, dp) }
       .mkString("{", ",", "}")
     def lineJson(dp: Int) =
-      s"""{"metric":"total","unit":"sec","queries":${qsJson(dp)},"r1_subset_total":${fmt(r1Subtotal, 3)},"n_queries":${results.size},"errors":$errJson,"sf":"$sfDir","total_s":${fmt(total, 3)},"value":${fmt(total, 3)}}"""
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
+      s"""{"metric":"total","unit":"sec","queries":${qsJson(dp)},"r1_subset_total":${fmt(r1Subtotal, 3)},"n_queries":${results.size},"n_failed":${errors.size},"errors":$errJson,"sf":"$sfDir","total_s":${fmt(total, 3)},"value":${fmt(total, 3)}}"""
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), lineJson(6) + "\n")
     catch { case e: Exception => System.err.println(s"[bench] $outFile write failed: ${e.getMessage}") }
     println(lineJson(2))
@@ -93,7 +95,9 @@ object Bench {
     // no per-query map) is what a tail-windowed reader actually parses.
     // Per-query values stay available in the full line and in
     // $SPARK_GRAFT_BENCH_OUT (full precision).
-    println(s"""{"metric":"total","unit":"sec","r1_subset_total":${fmt(r1Subtotal, 3)},"n_queries":${results.size},"errors":$errJson,"sf":"$sfDir","total_s":${fmt(total, 3)},"value":${fmt(total, 3)}}""")
+    println(s"""{"metric":"total","unit":"sec","r1_subset_total":${fmt(r1Subtotal, 3)},"n_queries":${results.size},"n_failed":${errors.size},"errors":$errJson,"sf":"$sfDir","total_s":${fmt(total, 3)},"value":${fmt(total, 3)}}""")
     spark.stop()
+    // a failed query must be loud: total_s above excludes it
+    if (errors.nonEmpty) sys.exit(1)
   }
 }

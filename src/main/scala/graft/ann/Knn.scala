@@ -1,9 +1,13 @@
 package graft.ann
 
+import graft.dedup.CandidateJoin
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** Nearest-neighbor search over embedding columns (`array<float>`).
   *
@@ -334,31 +338,7 @@ object Knn {
     def withNorm(df: DataFrame, id: String) =
       df.select(col(idCol).as(id), col(vecCol).cast("array<double>").as(s"__v_$id"))
         .withColumn(s"__n_$id", VectorFunctions.norm(col(s"__v_$id")))
-    // default (nBits = -1): the corpus-scaled sampled-planes banding —
-    // chunk width from the LARGER side's count, identical on both
-    // sides so the bucket keys align. An explicit nBits pins the
-    // legacy fixed slicing (bands×width ≤ the 64-bit signature), the
-    // domain that saturated at the sf1→sf10 decade — keep it for
-    // recall tuning at known corpus sizes, not as the default.
-    // `bands` defaults per tier (4 fixed / 8 scaled) and is honored on
-    // BOTH paths; `dims` defaults to the data's own vector length so
-    // the plane index set matches the Duck twin's caller-supplied dim
-    // for any corpus, not only 64-dim ones.
-    lazy val scaledWidth = widthForCount(math.max(src.count(), tgt.count()))
-    lazy val scaledDims = if (dims > 0) dims else inferDims(src, tgt, vecCol)
-    def bandsOf(df: DataFrame) =
-      if (nBits > 0) bandedSignBits(df, idCol, vecCol, nBits, if (bands > 0) bands else 4)
-      else scaledBandChunks(df, idCol, vecCol, scaledWidth,
-        bands = if (bands > 0) bands else 8, dims = scaledDims)
-    def cappedBands(df: DataFrame, id: String) =
-      bandsOf(df)
-        .withColumn("__bsz", count(lit(1)).over(
-          Window.partitionBy("band", "chunk")))
-        .filter(col("__bsz") <= maxBucket)
-        .select(col("band"), col("chunk"), col(idCol).as(id))
-    val cand = cappedBands(src, "src_id")
-      .join(cappedBands(tgt, "tgt_id"), Seq("band", "chunk"))
-      .select("src_id", "tgt_id").distinct()
+    val cand = lshCandidates(src, tgt, idCol, vecCol, nBits, bands, maxBucket, dims)
     val w = Window.partitionBy("src_id")
       .orderBy(col("__score").desc, col("tgt_id").asc)
     cand
@@ -370,6 +350,39 @@ object Knn {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .select(col("src_id"), col("tgt_id"), round(col("__score"), 4).as("score"))
+  }
+
+  /** Distinct (src_id, tgt_id) LSH candidates of the two-sided match
+    * tiers ([[findMatchesLsh]], [[Matcher.findMatchesLshTopN]]): rows of
+    * `src` and `tgt` sharing a capped (band, chunk) bucket.
+    *
+    * Default (nBits = -1): the corpus-scaled sampled-planes banding —
+    * chunk width from the LARGER side's count, identical on both sides
+    * so the bucket keys align. An explicit nBits pins the legacy fixed
+    * slicing (bands×width ≤ the 64-bit signature), the domain that
+    * saturated at the sf1→sf10 decade — keep it for recall tuning at
+    * known corpus sizes, not as the default. `bands` defaults per tier
+    * (4 fixed / 8 scaled) and is honored on BOTH paths; `dims` defaults
+    * to the data's own vector length so the plane index set matches the
+    * Duck twin's caller-supplied dim for any corpus, not only 64-dim
+    * ones.
+    */
+  private[ann] def lshCandidates(src: DataFrame, tgt: DataFrame, idCol: String,
+                                 vecCol: String, nBits: Int, bands: Int,
+                                 maxBucket: Int, dims: Int): DataFrame = {
+    val bandsOf: DataFrame => DataFrame =
+      if (nBits > 0) bandedSignBits(_, idCol, vecCol, nBits, if (bands > 0) bands else 4)
+      else {
+        // the two side counts are independent driver jobs — overlapped;
+        // the width they produce is the sequential one
+        val fSrc = Future(src.count())(ExecutionContext.global)
+        val nTgt = tgt.count()
+        val width = widthForCount(math.max(Await.result(fSrc, Duration.Inf), nTgt))
+        val d = if (dims > 0) dims else inferDims(src, tgt, vecCol)
+        scaledBandChunks(_, idCol, vecCol, width, bands = if (bands > 0) bands else 8, dims = d)
+      }
+    CandidateJoin.crossPairs(bandsOf(src), bandsOf(tgt), Seq("band", "chunk"), idCol, maxBucket)
+      .select("src_id", "tgt_id").distinct()
   }
 
   /** Vector dimensionality read off the data itself (first non-empty
@@ -566,17 +579,12 @@ object Knn {
     // chunk for band b = bits of planes(b).take(width): identical to
     // the Duck twin's full-width chunk masked to `width`, since bit j
     // comes from plane j in both engines.
-    // skew guard (same-keyed window, exchange reused by the join): a
-    // degenerate embedding corpus cannot turn one bucket quadratic
-    val bk = scaledBandChunks(e, idCol, "__v", width, bands, dims, maxWidth, seed)
-      .withColumn("__bsz", count(lit(1)).over(
-        Window.partitionBy("band", "chunk")))
-      .filter(col("__bsz") <= maxBucket)
-      .drop("__bsz")
-    val cand = bk.select(col("band"), col("chunk"), col(idCol).as("id_a"))
-      .join(bk.select(col("band"), col("chunk"), col(idCol).as("id_b")), Seq("band", "chunk"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    // skew guard: a degenerate embedding corpus cannot turn one bucket
+    // quadratic
+    val keys = Seq("band", "chunk")
+    val bk = CandidateJoin.cap(
+      scaledBandChunks(e, idCol, "__v", width, bands, dims, maxWidth, seed), keys, maxBucket)
+    val cand = CandidateJoin.selfPairs(bk, keys, idCol).select("id_a", "id_b").distinct()
     cand
       .join(e.select(col(idCol).as("id_a"), col("__v").as("__va"), col("__nrm").as("__na")), "id_a")
       .join(e.select(col(idCol).as("id_b"), col("__v").as("__vb"), col("__nrm").as("__nb")), "id_b")

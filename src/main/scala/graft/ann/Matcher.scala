@@ -148,32 +148,7 @@ object Matcher {
                          maxBucket: Int = 10000,
                          scope: graft.api.CacheScope = graft.api.CacheScope.global,
                          dims: Int = -1): DataFrame = {
-    // bands defaults per tier (4 fixed / 8 scaled) and is honored on
-    // both paths; dims defaults to the data's own vector length so the
-    // sampled plane set matches the Duck twin's caller-supplied dim.
-    // The two side counts are independent driver jobs — overlapped
-    // (guide §2.6); the width they produce is the sequential one.
-    lazy val scaledWidth = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fSrc = Future(src.count())
-      val nTgt = tgt.count()
-      Knn.widthForCount(math.max(Await.result(fSrc, Duration.Inf), nTgt))
-    }
-    lazy val scaledDims = if (dims > 0) dims else Knn.inferDims(src, tgt, vecCol)
-    def bandsOf(df: DataFrame) =
-      if (nBits > 0) Knn.bandedSignBits(df, idCol, vecCol, nBits, if (bands > 0) bands else 4)
-      else Knn.scaledBandChunks(df, idCol, vecCol, scaledWidth,
-        bands = if (bands > 0) bands else 8, dims = scaledDims)
-    def cappedBands(df: DataFrame, id: String) =
-      bandsOf(df)
-        .withColumn("__bsz", count(lit(1)).over(Window.partitionBy("band", "chunk")))
-        .filter(col("__bsz") <= maxBucket)
-        .select(col("band"), col("chunk"), col(idCol).as(id))
-    val cand = cappedBands(src, "src_id")
-      .join(cappedBands(tgt, "tgt_id"), Seq("band", "chunk"))
-      .select("src_id", "tgt_id").distinct()
+    val cand = Knn.lshCandidates(src, tgt, idCol, vecCol, nBits, bands, maxBucket, dims)
     val a = side(src, idCol, vecCol, "src_id", cfg)
       .withColumnRenamed("__vsrc_id", "__va")
       .withColumnRenamed("__nsrc_id", "__na").withColumnRenamed("__ssrc_id", "__sa")

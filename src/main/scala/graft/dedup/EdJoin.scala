@@ -34,12 +34,13 @@ import org.apache.spark.sql.functions._
   *     1 + min(ga − ra, gb − rb); pairs whose best shared prefix
   *     token cannot reach the count threshold die inside the same
   *     aggregation that dedupes candidates.
-  *  4. Count filter on candidates: one native
-  *     `graft_contained_count(tokens_a, tokens_b)` per candidate
-  *     (occurrence encoding makes the arrays distinct-element, so
-  *     contained-count IS the multiset intersection) prunes the
-  *     false-positive prefix collisions before any distance is
-  *     computed — measured 100:1 on the documents corpus.
+  *  4. Count filter on candidates: one native thresholded
+  *     sorted-merge `graft_sorted_inter_at_least(tokens_a, tokens_b,
+  *     need)` per candidate (occurrence encoding makes the sorted
+  *     arrays distinct-element, so the merge count IS the multiset
+  *     intersection; the walk aborts once `need` is out of reach)
+  *     prunes the false-positive prefix collisions before any
+  *     distance is computed — measured 100:1 on the documents corpus.
   *  5. Verify: Spark's codegen'd banded `levenshtein(a, b, d)`
   *     (O(d*len) early-exit, returns -1 past the threshold) on the
   *     survivors. DuckDB's unbanded `levenshtein` agrees on every
@@ -205,7 +206,8 @@ object EdJoin {
     // q·d of the whole array, so non-duplicate candidates (the 5.47M →
     // 1.8k at sf1) abort the walk after ~q·d mismatches instead of
     // paying ContainedCount's per-pair HashSet build + full probe —
-    // the former dominant stage of this query (EdJoinDiag). Exact
+    // the former dominant stage of this query (a per-stage profile
+    // put it ahead of the candidate join). Exact
     // selection: the kernel returns the true count whenever it is >=
     // the threshold and -1 only when provably below it.
     cand

@@ -98,17 +98,28 @@ object MinHash {
     * corpus side of the incremental delta join).
     */
   private[dedup] def bandRows(df: DataFrame, idCol: String, textCol: String,
-                              k: Int, w: Int, bands: Int): DataFrame = {
+                              k: Int, w: Int, bands: Int): DataFrame =
+    bandKeys(signatures(df, idCol, textCol, k, w), idCol, k, bands)
+
+  /** [[bandRows]] over already-computed [[signatures]]. */
+  private def bandKeys(sigs: DataFrame, idCol: String, k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
-    val sigs = signatures(df, idCol, textCol, k, w)
-    val bandKeys = (0 until bands).map { b =>
+    val keys = (0 until bands).map { b =>
       val slice = (b * r until (b + 1) * r).map(i => s"mh_$i")
       struct(lit(b).as("band"), md5(concat_ws(":", slice.map(col): _*)).as("bkey"))
     }
-    sigs.select(col(idCol), explode(array(bandKeys: _*)).as("bk"))
+    sigs.select(col(idCol), explode(array(keys: _*)).as("bk"))
       .select(col(idCol), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
   }
+
+  private val BandKey = Seq("band", "bkey")
+
+  /** Distinct (id_a, id_b) pairs sharing at least one capped band bucket. */
+  private def bandCandidates(bandRows: DataFrame, idCol: String, maxBucket: Int): DataFrame =
+    CandidateJoin.selfPairs(CandidateJoin.cap(bandRows, BandKey, maxBucket), BandKey, idCol)
+      .select("id_a", "id_b")
+      .distinct()
 
   /** (idCol, sh) — integer shingle sets, the exact-verify side. */
   private[dedup] def shingleSets(df: DataFrame, idCol: String, textCol: String,
@@ -129,41 +140,17 @@ object MinHash {
       threshold: Double = 0.5,
       maxBucket: Int = DefaultMaxBucket,
       scope: graft.api.CacheScope = graft.api.CacheScope.global): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val explodedRaw = bandRows(df, idCol, textCol, k, w, bands)
-    // skew guard: the bucket-size window shuffles on the SAME key as
-    // the self-join below, so its exchange is reused — the cap is free
-    val exploded = explodedRaw
-      .withColumn("__bsz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band", "bkey")))
-      .filter(col("__bsz") <= maxBucket)
-      .drop("__bsz")
-    val a = exploded.select(col("band"), col("bkey"), col(idCol).as("id_a"))
-    val b = exploded.select(col("band"), col("bkey"), col(idCol).as("id_b"))
-    val candidates = a.join(b, Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
+    val candidates = bandCandidates(bandRows(df, idCol, textCol, k, w, bands), idCol, maxBucket)
     // verify with exact Jaccard on shingle sets; persisted (into the
     // caller's CacheScope) because both join sides reference it — a
     // projection has no reusable exchange
-    val sh = scope.persist(hashedShingleDf(df, idCol, textCol, w)
-      .select(col(idCol), col("__hs").as("sh")))
-    // contained-count semantics (LEFT multiset), the native kernel —
-    // bit-identical to the oracle's list_filter/list_contains form even
-    // when a document carries duplicate shingles (a repeated phrase);
-    // size(array_intersect(...)) would count DISTINCT shared values and
-    // silently diverge on such documents
-    val verified = candidates
-      .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("inter", call_function("graft_contained_count",
-        col("sh_a"), col("sh_b")).cast("double"))
-      .withColumn("jaccard", round(col("inter") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")), 4))
+    val sh = scope.persist(shingleSets(df, idCol, textCol, w))
+    CandidateJoin.withJaccard(candidates
+        .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
+        .join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b"),
+        "sh_a", "sh_b", "jaccard")
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    verified
   }
 
   /** Signature-calibration report over the LSH candidate pairs:
@@ -187,28 +174,10 @@ object MinHash {
       bands: Int = 4,
       maxBucket: Int = DefaultMaxBucket,
       scope: graft.api.CacheScope = graft.api.CacheScope.global): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
     // persisted: the candidate self-join reads band rows twice, and the
     // signature/shingle frames each join back twice (a/b sides)
     val sigs = scope.persist(signatures(df, idCol, textCol, k, w))
-    val r = k / bands
-    val bandKeys = (0 until bands).map { b =>
-      val slice = (b * r until (b + 1) * r).map(i => s"mh_$i")
-      struct(lit(b).as("band"), md5(concat_ws(":", slice.map(col): _*)).as("bkey"))
-    }
-    val exploded = sigs
-      .select(col(idCol), explode(array(bandKeys: _*)).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-      .withColumn("__bsz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band", "bkey")))
-      .filter(col("__bsz") <= maxBucket)
-      .drop("__bsz")
-    val a = exploded.select(col("band"), col("bkey"), col(idCol).as("id_a"))
-    val b = exploded.select(col("band"), col("bkey"), col(idCol).as("id_b"))
-    val candidates = a.join(b, Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
+    val candidates = bandCandidates(bandKeys(sigs, idCol, k, bands), idCol, maxBucket)
     val sigA = sigs.select(col(idCol).as("id_a") +:
       (0 until k).map(i => col(s"mh_$i").as(s"a_mh_$i")): _*)
     val sigB = sigs.select(col(idCol).as("id_b") +:
@@ -216,17 +185,13 @@ object MinHash {
     val eqCnt = (0 until k).map(i =>
       when(col(s"a_mh_$i") === col(s"b_mh_$i"), 1).otherwise(0))
       .reduce(_ + _)
-    val sh = scope.persist(hashedShingleDf(df, idCol, textCol, w)
-      .select(col(idCol), col("__hs").as("sh")))
-    candidates
-      .join(sigA, "id_a").join(sigB, "id_b")
-      .withColumn("est_j", round(eqCnt / lit(k.toDouble), 4))
-      .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("inter", call_function("graft_contained_count",
-        col("sh_a"), col("sh_b")).cast("double"))
-      .withColumn("exact_j", round(col("inter") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")), 4))
+    val sh = scope.persist(shingleSets(df, idCol, textCol, w))
+    CandidateJoin.withJaccard(candidates
+        .join(sigA, "id_a").join(sigB, "id_b")
+        .withColumn("est_j", round(eqCnt / lit(k.toDouble), 4))
+        .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
+        .join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b"),
+        "sh_a", "sh_b", "exact_j")
       .select(col("id_a"), col("id_b"), col("est_j"), col("exact_j"))
   }
 

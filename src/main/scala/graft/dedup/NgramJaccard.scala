@@ -2,7 +2,6 @@ package graft.dedup
 
 import graft.text.TextFunctions
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact n-gram Jaccard similarity pairs via an inverted shingle index —
@@ -49,27 +48,30 @@ object NgramJaccard {
     graft.functions.GraftFunctions.register(df.sparkSession)
     val raw = df.select(col(idCol),
       explode(call_function("graft_hashed_shingles", col(textCol), lit(w))).as("s"))
-    // persisted AFTER the df-cap: referenced by the size aggregation and
-    // BOTH sides of the inverted-index self-join (three subplan
-    // evaluations otherwise), and the cached blocks arrive
-    // hash-partitioned on `s` from the cap window's exchange
-    val sh = scope.persist(raw
-      .withColumn("__df", count(lit(1)).over(Window.partitionBy("s")))
-      .filter(col("__df") <= maxDf)
-      .drop("__df"))
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-    val inter = sh.select(col(idCol).as("id_a"), col("s"))
-      .join(sh.select(col(idCol).as("id_b"), col("s")), Seq("s"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), "id_b")
+    cappedOverlaps(raw, idCol, maxDf, scope)
       .withColumn("jaccard", round(col("inter").cast("double") /
         (col("sz_a") + col("sz_b") - col("inter")).cast("double"), 4))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
+  }
+
+  /** (id_a, id_b, inter, sz_a, sz_b) over the df-capped postings `raw`
+    * (idCol, s): shared-shingle count per co-occurring pair next to
+    * both sides' posting counts. Persisted AFTER the cap: the postings
+    * are referenced by the size aggregation and BOTH sides of the
+    * inverted-index self-join (three subplan evaluations otherwise),
+    * and the cached blocks arrive hash-partitioned on `s` from the cap
+    * window's exchange.
+    */
+  private def cappedOverlaps(raw: DataFrame, idCol: String, maxDf: Int,
+                             scope: graft.api.CacheScope): DataFrame = {
+    val sh = scope.persist(CandidateJoin.cap(raw, Seq("s"), maxDf))
+    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
+    CandidateJoin.selfPairs(sh, Seq("s"), idCol)
+      .groupBy("id_a", "id_b")
+      .agg(count(lit(1)).as("inter"))
+      .join(sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), "id_a")
+      .join(sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), "id_b")
   }
 
   /** EXACT set-Jaccard pairs via prefix filtering (the AllPairs/PPJoin
@@ -91,7 +93,7 @@ object NgramJaccard {
     * creates a quadratic bucket.
     *
     * Scale note: ScaleSmoke's ~7x wall-clock at 10x data is LINEAR
-    * stage growth, not candidate blowup — [[graft.PPJoinDiag]] measures
+    * stage growth, not candidate blowup — a per-stage count measured
     * every stage at 9.9-10.1x for 10x salted corpus (postings 261k,
     * prefix 134k, len-filtered join 13.9k, post-positional 274,
     * verified 250 — vs exactly 1/10th each at 1x). The sub-10x ratio is
@@ -153,29 +155,21 @@ object NgramJaccard {
     // only ~3-5 bit-length bands — the fuel cut cannot repay the
     // explode. Contrast EdJoin.edPairs, where the prefix is q·d+1
     // rows/string and lengths span ~70 bands.
-    val cand = prefix.select(col(idCol).as("id_a"), col("sz").as("sz_a"),
-        col("s"), col("__r").as("__ra"))
-      .join(prefix.select(col(idCol).as("id_b"), col("sz").as("sz_b"),
-        col("s"), col("__r").as("__rb")), Seq("s"))
-      .filter(col("id_a") < col("id_b"))
+    val cand = CandidateJoin.selfPairs(prefix, Seq("s"), idCol, carry = Seq("sz", "__r"))
       .filter(lit(threshold) * greatest(col("sz_a"), col("sz_b"))
         <= least(col("sz_a"), col("sz_b")))
       .groupBy("id_a", "id_b", "sz_a", "sz_b")
-      .agg(max(lit(1) + least(col("sz_a") - col("__ra"), col("sz_b") - col("__rb")))
+      .agg(max(lit(1) + least(col("sz_a") - col("__r_a"), col("sz_b") - col("__r_b")))
         .as("__max_overlap"))
       .filter(col("__max_overlap") >=
         ceil(lit(threshold) / (lit(1.0) + lit(threshold)) * (col("sz_a") + col("sz_b"))))
       .select("id_a", "id_b")
-    // native contained-count verify (arrays here are distinct sets, so
-    // multiset-left semantics equal set intersection — and they match
-    // the oracle's list_filter form exactly)
-    cand
-      .join(hs.select(col(idCol).as("id_a"), col("hs").as("hs_a")), "id_a")
-      .join(hs.select(col(idCol).as("id_b"), col("hs").as("hs_b")), "id_b")
-      .withColumn("inter", call_function("graft_contained_count",
-        col("hs_a"), col("hs_b")).cast("double"))
-      .withColumn("jaccard", round(col("inter") /
-        (size(col("hs_a")) + size(col("hs_b")) - col("inter")), 4))
+    // exact verify (arrays here are distinct sets, so the contained
+    // count equals set intersection)
+    CandidateJoin.withJaccard(cand
+        .join(hs.select(col(idCol).as("id_a"), col("hs").as("hs_a")), "id_a")
+        .join(hs.select(col(idCol).as("id_b"), col("hs").as("hs_b")), "id_b"),
+        "hs_a", "hs_b", "jaccard")
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
@@ -204,19 +198,7 @@ object NgramJaccard {
     val raw = df.select(col(idCol),
       explode(array_distinct(
         call_function("graft_hashed_shingles", col(textCol), lit(w)))).as("s"))
-    val sh = scope.persist(raw
-      .withColumn("__df", count(lit(1)).over(Window.partitionBy("s")))
-      .filter(col("__df") <= maxDf)
-      .drop("__df"))
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-    val inter = sh.select(col(idCol).as("id_a"), col("s"))
-      .join(sh.select(col(idCol).as("id_b"), col("s")), Seq("s"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), "id_b")
+    cappedOverlaps(raw, idCol, maxDf, scope)
       .withColumn("overlap", round(col("inter").cast("double") /
         least(col("sz_a"), col("sz_b")).cast("double"), 4))
       .filter(col("overlap") >= threshold)

@@ -122,13 +122,10 @@ object SignatureIndex {
       .select(col(idCol).as("corpus_id"), col("new_id"))
       .filter(col("corpus_id") =!= col("new_id")) // delta re-runs after append
       .distinct()
-    cand
-      .join(corpusSh.select(col(idCol).as("corpus_id"), col("sh").as("sh_a")), "corpus_id")
-      .join(broadcast(deltaSh.select(col(idCol).as("new_id"), col("sh").as("sh_b"))), "new_id")
-      .withColumn("inter", call_function("graft_contained_count",
-        col("sh_a"), col("sh_b")).cast("double"))
-      .withColumn("jaccard", round(col("inter") /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")), 4))
+    CandidateJoin.withJaccard(cand
+        .join(corpusSh.select(col(idCol).as("corpus_id"), col("sh").as("sh_a")), "corpus_id")
+        .join(broadcast(deltaSh.select(col(idCol).as("new_id"), col("sh").as("sh_b"))), "new_id"),
+        "sh_a", "sh_b", "jaccard")
       .filter(col("jaccard") >= threshold)
       .select(col("new_id"), col("corpus_id"), col("jaccard"))
   }

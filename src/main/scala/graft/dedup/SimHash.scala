@@ -104,21 +104,13 @@ object SimHash {
     // hamming-verify directly on the bucket join output, BEFORE the
     // distinct — failing candidates never reach a shuffle, and no
     // join-back to the fingerprint table is needed.
-    val exRaw = fps
+    val keys = Seq("band", "chunk")
+    val ex = fps
       .select(col(idCol), col("simhash"), explode(array(chunkCols: _*)).as("bc"))
       .select(col(idCol), col("simhash"), col("bc.band").as("band"), col("bc.chunk").as("chunk"))
-    // skew guard: the bucket-size window shuffles on the SAME key as
-    // the self-join below, so its exchange is reused — the cap is free
-    val ex = exRaw
-      .withColumn("__bsz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band", "chunk")))
-      .filter(col("__bsz") <= maxBucket)
-      .drop("__bsz")
-    ex.select(col("band"), col("chunk"), col(idCol).as("id_a"), col("simhash").as("sh_a"))
-      .join(ex.select(col("band"), col("chunk"), col(idCol).as("id_b"), col("simhash").as("sh_b")),
-        Seq("band", "chunk"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("dist", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
+    CandidateJoin.selfPairs(CandidateJoin.cap(ex, keys, maxBucket), keys, idCol,
+        carry = Seq("simhash"))
+      .withColumn("dist", bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))))
       .filter(col("dist") <= maxDist)
       .select(col("id_a"), col("id_b"), col("dist"))
       .distinct()

@@ -2,7 +2,6 @@ package graft.dedup
 
 import graft.text.TextFunctions
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Winnowing document fingerprints (Schleimer, Wilkerson & Aiken 2003,
@@ -109,13 +108,7 @@ object Winnow {
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val exploded = fingerprintSets(df, idCol, textCol, w, window)
       .select(col(idCol), explode(col("fp")).as("f"))
-      .withColumn("__bsz", count(lit(1)).over(Window.partitionBy("f")))
-      .filter(col("__bsz") <= maxBucket)
-      .drop("__bsz")
-    val a = exploded.select(col("f"), col(idCol).as("id_a"))
-    val b = exploded.select(col("f"), col(idCol).as("id_b"))
-    a.join(b, Seq("f"))
-      .filter(col("id_a") < col("id_b"))
+    CandidateJoin.selfPairs(CandidateJoin.cap(exploded, Seq("f"), maxBucket), Seq("f"), idCol)
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
