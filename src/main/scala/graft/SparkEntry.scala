@@ -20,10 +20,8 @@ object SparkEntry {
     PipelineQueries,
     SketchQueries)
 
-  // def, not lazy val: oracle SQL may embed model state captured while
-  // the queries ran (Pca.lastFit) — Verify calls oracleSql AFTER the
-  // query loop, so the registry must be rebuilt at that point.
-  private def registry: Seq[Q] = querySets.flatMap(_.all)
+  /** Every registered query, in declared order. */
+  private[graft] val registry: Seq[Q] = querySets.flatMap(_.all)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
@@ -35,16 +33,13 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.fn).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
-
-  /** [[oracleSql]] restricted to `wanted` names, rendering ONLY those
-    * thunks — a targeted Verify must not render oracles of queries it
-    * never ran (their captured model state is absent and they throw).
+  /** For each key in queries accepted by `wanted`, equivalent ANSI SQL
+    * runnable by DuckDB on the same parquet tables, rendered against
+    * the (session, dir) the queries ran on. Omit for non-SQL-expressible
+    * ops.
     */
-  def oracleSqlFiltered(wanted: String => Boolean): Map[String, String] =
+  def oracleSql(spark: SparkSession, sfDir: String,
+      wanted: String => Boolean = _ => true): Map[String, String] =
     registry.filter(q => wanted(q.name))
-      .flatMap(q => q.oracle.map(q.name -> _)).toMap
+      .flatMap(q => q.oracle(spark, sfDir).map(q.name -> _)).toMap
 }

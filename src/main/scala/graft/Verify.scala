@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each registered query's result → parquet
+  * (run in the registry's declared order),
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -13,11 +14,11 @@ object Verify {
     def wanted(name: String) = only.forall(_.contains(name))
     val spark = LocalSession.build()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    SparkEntry.registry.filter(q => wanted(q.name)).foreach { q =>
+      try q.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
       finally graft.api.CacheScope.global.release(blocking = true)
     }
@@ -33,7 +34,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSqlFiltered(wanted)
+    val json = SparkEntry.oracleSql(spark, sfDir, wanted)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -44,36 +44,6 @@ object KMeans {
   private[ann] def euclidCellExpr(cent: Array[(Long, Seq[Double])]): Column =
     bestCellStruct(cent).getField("cid")
 
-  /** Memoized [[fit]] (the BpeTrain.fitCached pattern): registry
-    * queries that SHARE a trained model (silhouette / cluster terms
-    * riding the same corpus + hyperparameters) reuse one fit per
-    * sweep instead of re-running Lloyd's per query. fit is
-    * deterministic, so the memo never changes results. Keyed by an
-    * explicit corpusKey (the sf dir + embedding source) — a different
-    * corpus retrains.
-    */
-  def fitCached(df: DataFrame, idCol: String, vecCol: String, k: Int,
-                maxIters: Int, corpusKey: String): Model = synchronized {
-    val key = (corpusKey, idCol, vecCol, k, maxIters)
-    if (fitCacheKey != key) {
-      fitCacheVal = fit(df, idCol, vecCol, k, maxIters)
-      fitCacheKey = key
-    }
-    fitCacheVal
-  }
-
-  /** Always train (the canonical-trainer query must measure the fit),
-    * refreshing the memo the dependent queries reuse.
-    */
-  def fitRefresh(df: DataFrame, idCol: String, vecCol: String, k: Int,
-                 maxIters: Int, corpusKey: String): Model = synchronized {
-    fitCacheVal = fit(df, idCol, vecCol, k, maxIters)
-    fitCacheKey = (corpusKey, idCol, vecCol, k, maxIters)
-    fitCacheVal
-  }
-  @volatile private var fitCacheKey: (String, String, String, Int, Int) = _
-  @volatile private var fitCacheVal: Model = _
-
   def fit(df: DataFrame, idCol: String, vecCol: String, k: Int,
           maxIters: Int = 10, tol: Double = 1e-9): Model = {
     graft.functions.GraftFunctions.register(df.sparkSession)

@@ -28,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * The merge list arrives as a FOLDABLE string literal
   * (`lhs RS rhs` units joined by GS, rank order — see [[BpeApply.packMerges]]),
   * parsed once per expression instance, so the codegen call is a
-  * plain static method on two strings.
+  * plain method on the document and the already-parsed merges.
   */
 case class BpeApply(left: Expression, right: Expression) extends BinaryExpression {
 
@@ -46,12 +46,22 @@ case class BpeApply(left: Expression, right: Expression) extends BinaryExpressio
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_bpe_apply"
 
-  override def nullSafeEval(text: Any, merges: Any): Any =
-    BpeApply.compute(text.asInstanceOf[UTF8String], merges.asInstanceOf[UTF8String])
+  // the foldable merge literal, parsed once per expression instance
+  // (re-parsed after deserialization on an executor, never per row)
+  @transient private lazy val merges: Array[Array[String]] =
+    BpeApply.parse(right.eval().asInstanceOf[UTF8String])
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, m) =>
+  override def nullSafeEval(text: Any, packed: Any): Any =
+    BpeApply.compute(text.asInstanceOf[UTF8String], merges)
+
+  // the parsed list rides into generated code as a reference object
+  // (Spark's foldable-argument idiom), so the per-row call never
+  // sees the packed string
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val m = ctx.addReferenceObj("bpeMerges", merges, "java.lang.String[][]")
+    nullSafeCodeGen(ctx, ev, (t, _) =>
       s"${ev.value} = graft.functions.BpeApply$$.MODULE$$.compute($t, $m);")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BpeApply =
@@ -70,33 +80,21 @@ object BpeApply {
   def packMerges(merges: Seq[(String, String)]): String =
     merges.map { case (l, r) => s"$l$RS$r" }.mkString(GS.toString)
 
-  // the packed literal is identical for every row of a query; cache
-  // the parsed form so eval/codegen pay the parse once per executor,
-  // not once per row. Key and value live in ONE volatile pair so a
-  // concurrent reader can never pair a new key with a stale value
-  // (executor JVMs run many task threads; two queries with different
-  // tokenizers would otherwise race the two-field write)
-  @volatile private var cache: (UTF8String, Array[Array[String]]) = _
-
-  private def parse(packed: UTF8String): Array[Array[String]] = {
-    val c = cache
-    if (c != null && c._1.equals(packed)) return c._2
-    val parsed =
-      if (packed.numBytes() == 0) Array.empty[Array[String]]
-      else packed.toString.split(GS).map { unit =>
-        val i = unit.indexOf(RS)
-        Array(unit.substring(0, i), unit.substring(i + 1))
-      }
-    cache = (packed.clone(), parsed)
-    parsed
-  }
+  /** Unpack the literal into (lhs, rhs) pairs, rank order; a null or
+    * empty literal is the empty merge list.
+    */
+  private def parse(packed: UTF8String): Array[Array[String]] =
+    if (packed == null || packed.numBytes() == 0) Array.empty
+    else packed.toString.split(GS).map { unit =>
+      val i = unit.indexOf(RS)
+      Array(unit.substring(0, i), unit.substring(i + 1))
+    }
 
   /** Tokenize one document: lowercase, split on whitespace, keep
     * `[a-z]+` words, apply every merge greedy-leftmost per word,
     * flatten. Matches the chained-replace SQL twin bit for bit.
     */
-  def compute(text: UTF8String, packedMerges: UTF8String): ArrayData = {
-    val merges = parse(packedMerges)
+  def compute(text: UTF8String, merges: Array[Array[String]]): ArrayData = {
     val s = text.toLowerCase.toString
     val out = new ArrayBuffer[UTF8String]()
     var wStart = 0

@@ -23,38 +23,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SearchEval {
 
-  /** Probe queries captured per call, KEYED by (idCol, textCol,
-    * probeIds) — the oracle builder runs AFTER the queries (the
-    * Pca.lastFit pattern) and looks its probes up under the same key.
-    * A single last-call slot could pair the wrong probes if another
-    * eval ran between the query and the oracle dump.
+  /** Each probe's query: the first `nTerms` lowercased whitespace
+    * tokens of its text, sorted by id — one bounded filtered collect.
+    * Deterministic, so an oracle re-derives exactly the probes its
+    * query ran.
     */
-  private val captured =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Seq[Long]), Seq[(Long, String)]]()
-
-  /** Probes captured by the most recent eval over this key (empty if
-    * the eval has not run — oracle builders must reject that).
-    */
-  def capturedProbes(idCol: String, textCol: String,
-      probeIds: Seq[Long]): Seq[(Long, String)] =
-    Option(captured.get((idCol, textCol, probeIds))).getOrElse(Seq.empty)
-
-  /** Derive each probe's query (first nTerms tokens) — one bounded
-    * filtered collect — and record it under the capture key.
-    */
-  private def deriveProbes(df: DataFrame, idCol: String, textCol: String,
+  def probes(df: DataFrame, idCol: String, textCol: String,
       probeIds: Seq[Long], nTerms: Int): Seq[(Long, String)] = {
     import org.apache.spark.sql.functions.col
-    val probes: Seq[(Long, String)] = df
-      .filter(col(idCol).isin(probeIds: _*))
+    df.filter(col(idCol).isin(probeIds: _*))
       .select(col(idCol).cast("long"), col(textCol).cast("string"))
       .collect()
       .map(r => r.getLong(0) ->
         r.getString(1).toLowerCase.split("\\s+").filter(_.nonEmpty)
           .take(nTerms).mkString(" "))
       .sortBy(_._1).toSeq
-    captured.put((idCol, textCol, probeIds), probes)
-    probes
   }
 
   /** (probe_id, query, rank, rr) per probe: rank of the probe doc in
@@ -64,7 +47,7 @@ object SearchEval {
   def bm25SelfMrr(df: DataFrame, idCol: String, textCol: String,
       probeIds: Seq[Long], nTerms: Int = 4, k: Int = 10): DataFrame = {
     val spark = df.sparkSession
-    val probes = deriveProbes(df, idCol, textCol, probeIds, nTerms)
+    val probes = this.probes(df, idCol, textCol, probeIds, nTerms)
     // one batched plan for every probe; per-probe lists come back in
     // rank order (score DESC, id ASC — the search's own total order)
     val byProbe: Map[Long, Seq[Long]] =
@@ -97,7 +80,7 @@ object SearchEval {
       probeIds: Seq[Long], nTerms: Int = 4, k: Int = 10,
       scope: graft.api.CacheScope = graft.api.CacheScope.global): DataFrame = {
     val spark = df.sparkSession
-    val probes = deriveProbes(df, idCol, textCol, probeIds, nTerms)
+    val probes = this.probes(df, idCol, textCol, probeIds, nTerms)
     // the two retrievers are independent jobs — overlap them from
     // driver threads (guide §2.6, the q_ann_recall pattern); each
     // collect and its result are the sequential ones verbatim
@@ -126,13 +109,12 @@ object SearchEval {
 
   /** DuckDB twin of [[retrieverAgreement]]: replays BOTH retrievers'
     * full top-k per probe and counts the id intersection. Rejects an
-    * empty probe list (an oracle dumped before its query ran would
-    * otherwise render invalid SQL).
+    * empty probe list (it would render invalid SQL).
     */
   def retrieverAgreementDuckSql(table: String, idCol: String, textCol: String,
       probes: Seq[(Long, String)], k: Int = 10): String = {
     require(probes.nonEmpty,
-      "no captured probes — run retrieverAgreement before building its oracle")
+      "retrieverAgreementDuckSql needs at least one probe")
     val parts = probes.map { case (pid, q) =>
       val esc = q.replace("'", "''")
       s"""SELECT CAST($pid AS BIGINT) AS probe_id, '$esc' AS query,
@@ -149,13 +131,13 @@ object SearchEval {
   }
 
   /** DuckDB twin of [[bm25SelfMrr]]: replays each probe's full BM25
-    * top-k (the captured query literals) and the rank/rr extraction,
+    * top-k (the probe query literals) and the rank/rr extraction,
     * one CTE pair per probe, UNION ALL. Rejects an empty probe list.
     */
   def bm25SelfMrrDuckSql(table: String, idCol: String, textCol: String,
       probes: Seq[(Long, String)], k: Int = 10): String = {
     require(probes.nonEmpty,
-      "no captured probes — run bm25SelfMrr before building its oracle")
+      "bm25SelfMrrDuckSql needs at least one probe")
     val parts = probes.map { case (pid, q) =>
       val esc = q.replace("'", "''")
       // rank re-derives the search's OWN deterministic order

@@ -137,41 +137,9 @@ object Pca {
     df.select(col(idCol) +: pcs.toSeq: _*)
   }
 
-  /** Fit + project in one call (reference reduce_dimensions analog).
-    * The fitted model is parked in [[lastFit]] so Verify's oracle dump
-    * (which runs AFTER the queries) can embed the components as
-    * literals for an independent DuckDB re-projection.
-    */
-  def fitProject(df: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val model = fit(df, vecCol, k)
-    lastFit = Some(model)
-    project(df, idCol, vecCol, model)
-  }
-
-  // Model-sharing memo (the KMeans.fitCached pattern): the canonical
-  // trainer query always fits and REFRESHES the memo (its bench entry
-  // measures training); dependent queries reuse the fit instead of
-  // re-running the Σx/Σxxᵀ pass. Keyed by corpus dir so sf0.01 verify
-  // and sf0.1 bench sweeps never cross-contaminate.
-  private val memo = scala.collection.concurrent.TrieMap.empty[String, PcaModel]
-
-  /** Fit and refresh the memo under `corpusKey` — the trainer's path. */
-  def fitRefresh(df: DataFrame, vecCol: String, k: Int, corpusKey: String): PcaModel = {
-    val m = fit(df, vecCol, k)
-    memo.put(s"$corpusKey:k$k", m)
-    lastFit = Some(m)
-    m
-  }
-
-  /** Memoized fit: reuse the trainer's model when present (fit is
-    * deterministic on the same corpus, so run order cannot change the
-    * result — only whether the Σx/Σxxᵀ pass reruns).
-    */
-  def fitCached(df: DataFrame, vecCol: String, k: Int, corpusKey: String): PcaModel = {
-    val m = memo.getOrElseUpdate(s"$corpusKey:k$k", fit(df, vecCol, k))
-    lastFit = Some(m)
-    m
-  }
+  /** Fit + project in one call (reference reduce_dimensions analog). */
+  def fitProject(df: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame =
+    project(df, idCol, vecCol, fit(df, vecCol, k))
 
   /** PCA-whitened projection: each component score divides by the
     * component's standard deviation sqrt(λ), so the output coordinates
@@ -301,12 +269,6 @@ object Pca {
        |  round(trace, 4) AS trace,
        |  round(CASE WHEN fro2 <> 0 THEN trace * trace / fro2 END, 4) AS eff_dim
        |FROM s""".stripMargin
-
-  /** Model from the most recent [[fitProject]] in this JVM — oracle
-    * plumbing only (Verify runs every query, then dumps oracleSql;
-    * the eigen math itself is pinned by PcaSpec).
-    */
-  @volatile var lastFit: Option[PcaModel] = None
 
   /** DuckDB re-projection of `model`: components and offsets embedded
     * as full-precision literals (Double.toString round-trips), the

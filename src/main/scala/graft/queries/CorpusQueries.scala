@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.ops.Corpus
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Corpus-level text statistics over `documents` (SURVEY §2 rows
@@ -11,6 +12,12 @@ import org.apache.spark.sql.functions._
   * engines rank the same values.
   */
 object CorpusQueries extends QuerySet {
+
+  // The tokenizer q_bpe_stats and q_bpe_encode train, and their oracles
+  // retrain from the same (session, dir): training is deterministic, so
+  // each oracle inlines exactly the merges its query used.
+  private def bpeFit(s: SparkSession, d: String) =
+    graft.text.BpeTrain.fit(Tables.df(s, d, "documents"), "text", nMerges = 10)
 
   def all: Seq[Q] = Seq(
     Q("q_top_ngrams",
@@ -285,7 +292,7 @@ object CorpusQueries extends QuerySet {
     // greedy left-to-right replace semantics — in DuckDB
     Q("q_bpe_train",
       (s, d) => graft.text.BpeTrain.fitDF(
-        s, Tables.df(s, d, "documents"), "text", nMerges = 10, corpusKey = d),
+        s, Tables.df(s, d, "documents"), "text", nMerges = 10),
       Some(graft.text.BpeTrain.fitDuckSql("documents", "text", nMerges = 10))),
 
     // per-source top-quantile quality gate: keep the best 30% of each
@@ -297,38 +304,35 @@ object CorpusQueries extends QuerySet {
         .orderBy("doc_id"),
       Some(Corpus.qualityTopQDuckSql("documents", "doc_id", "source", "text", q = 0.3))),
 
-    // tokenizer fertility per language from the just-trained merges:
+    // tokenizer fertility per language from freshly trained merges:
     // tokens/word + chars/token per group — the over-fragmentation
-    // check; oracle re-encodes with the same literal merges
-    Q("q_bpe_stats",
+    // check; the oracle re-encodes with the same literal merges
+    // (q_bpe_train's oracle pins the training loop itself)
+    new Q("q_bpe_stats",
       (s, d) => {
-        val docs = Tables.df(s, d, "documents")
-        val merges = graft.text.BpeTrain.fitCached(docs, "text", nMerges = 10, corpusKey = d)
-        graft.text.BpeTrain.fertilityStats(docs, "lang", "text", merges)
+        graft.text.BpeTrain.fertilityStats(Tables.df(s, d, "documents"), "lang", "text",
+          bpeFit(s, d))
           .orderBy("lang")
       },
-      Some(graft.text.BpeTrain.fertilityStatsDuckSql(
-        "documents", "doc_id", "lang", "text", graft.text.BpeTrain.lastFit))),
+      (s, d) => Some(graft.text.BpeTrain.fertilityStatsDuckSql(
+        "documents", "doc_id", "lang", "text", bpeFit(s, d)))),
 
-    // map-only encode with the merges just trained: the merge table
+    // map-only encode with freshly trained merges: the merge table
     // compiles into a chained replace per word — no joins, no state,
-    // the 100 TB tokenization pass. Oracle inlines the same merges as
-    // literals (built after the query runs — the Pca.lastFit pattern).
+    // the 100 TB tokenization pass. The oracle inlines the same merges
+    // as literals.
     // The token array serializes to a space-joined string for the
     // driver comparator (arrays crash its pandas sort — the
     // q_mlm_mask pattern); library callers use BpeTrain.encode's
     // array form directly.
-    Q("q_bpe_encode",
+    new Q("q_bpe_encode",
       (s, d) => {
-        val docs = Tables.df(s, d, "documents")
-        val merges = graft.text.BpeTrain.fitCached(docs, "text", nMerges = 10, corpusKey = d)
-        graft.text.BpeTrain.encode(docs, "text", merges)
+        graft.text.BpeTrain.encode(Tables.df(s, d, "documents"), "text", bpeFit(s, d))
           .select(col("doc_id"), array_join(col("tokens"), " ").as("tokens"))
           .orderBy("doc_id")
       },
-      Some("SELECT doc_id, array_to_string(tokens, ' ') AS tokens FROM ("
-        + graft.text.BpeTrain.encodeDuckSql(
-            "documents", "doc_id", "text", graft.text.BpeTrain.lastFit)
+      (s, d) => Some("SELECT doc_id, array_to_string(tokens, ' ') AS tokens FROM ("
+        + graft.text.BpeTrain.encodeDuckSql("documents", "doc_id", "text", bpeFit(s, d))
         + ") enc ORDER BY doc_id")),
 
     // Source concentration: Gini over per-source token mass — the

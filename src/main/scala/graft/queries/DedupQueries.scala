@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.dedup.{Cluster, EdJoin, MinHash, NgramJaccard, SimHash}
 import graft.text.TextFunctions
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators over the `documents` table (SURVEY §2 rows
@@ -13,30 +14,15 @@ import org.apache.spark.sql.functions._
   */
 object DedupQueries extends QuerySet {
 
-  /** One MinHash pairs → components computation per corpus dir, shared
-    * by the three component consumers (q_dedup_cluster refreshes it;
-    * q_dedup_keep / q_dup_histogram reuse). connectedComponents is
-    * EAGER and returns a driver- or checkpoint-materialized frame, so
-    * the memoized reference never recomputes the pair pipeline. The
-    * LIBRARY path (Collection.dedupe) stays memo-free — this is
-    * registry-sweep amortization only.
+  /** MinHash pairs → connected components (id, cluster = min doc id of
+    * the group), the input of every component query. Each query builds
+    * its own: connectedComponents is EAGER and returns a driver- or
+    * checkpoint-materialized frame.
     */
-  private def componentsRefresh(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = synchronized {
-    ccVal = graft.dedup.Cluster.connectedComponents(
+  private def components(s: SparkSession, d: String): DataFrame =
+    Cluster.connectedComponents(
       MinHash.nearDupPairs(Tables.df(s, d, "documents"), "doc_id", "text"),
       "id_a", "id_b")
-    // the memoized frame is BOUND to the session that built it — key on
-    // (session, dir) so a restarted session never receives a plan tied
-    // to a dead one (the KMeans/Pca memos dodge this by caching only
-    // driver-side arrays; a DataFrame memo must carry its session)
-    ccKey = ((s, d))
-    ccVal
-  }
-  private def componentsCached(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = synchronized {
-    if (ccKey != ((s, d))) componentsRefresh(s, d) else ccVal
-  }
-  @volatile private var ccKey: (org.apache.spark.sql.SparkSession, String) = _
-  @volatile private var ccVal: org.apache.spark.sql.DataFrame = _
 
   def all: Seq[Q] = Seq(
     // Exact dedup: group by order-insensitive token-set fingerprint,
@@ -79,7 +65,7 @@ object DedupQueries extends QuerySet {
     // Duplicate clusters from the MinHash pairs: connected components
     // by min-label propagation; cluster id = min doc id of the group.
     Q("q_dedup_cluster",
-      (s, d) => componentsRefresh(s, d).orderBy("id"),
+      (s, d) => components(s, d).orderBy("id"),
       Some(Cluster.connectedComponentsDuckSql(
         MinHash.nearDupPairsDuckSql("documents", "doc_id", "text"),
         "id_a", "id_b") + "\nORDER BY id")),
@@ -91,7 +77,7 @@ object DedupQueries extends QuerySet {
     // aggregations over the component labels; output is
     // distinct-cluster-sizes rows.
     Q("q_dup_histogram",
-      (s, d) => componentsCached(s, d)
+      (s, d) => components(s, d)
         .groupBy("cluster").agg(count(lit(1)).as("sz"))
         .groupBy(col("sz").as("cluster_size"))
         .agg(count(lit(1)).as("n_clusters"))
@@ -106,12 +92,12 @@ object DedupQueries extends QuerySet {
 
     // One-row dedup health summary — the number a corpus report leads
     // with: docs, docs in a near-dup cluster, cluster count, and the
-    // fraction the prune would drop. Derived entirely from the shared
+    // fraction the prune would drop. Derived entirely from the
     // component table (bounded: only docs WITH a duplicate appear) +
     // one corpus count.
     Q("q_dedup_rate",
       (s, d) => {
-        val cc = componentsCached(s, d)
+        val cc = components(s, d)
         val nDocs = Tables.df(s, d, "documents")
           .agg(count(lit(1)).as("n_docs"))
         val stats = cc.agg(
@@ -221,7 +207,7 @@ object DedupQueries extends QuerySet {
     Q("q_dup_rate_source",
       (s, d) => {
         val docs = Tables.df(s, d, "documents").select(col("doc_id"), col("source"))
-        docs.join(componentsCached(s, d).withColumnRenamed("id", "doc_id"),
+        docs.join(components(s, d).withColumnRenamed("id", "doc_id"),
             Seq("doc_id"), "left")
           .groupBy("source")
           .agg(count(lit(1)).as("n_docs"),
@@ -273,13 +259,13 @@ object DedupQueries extends QuerySet {
     // the fairness check run before shipping a dedup config (LSH over
     // shingles is length-sensitive: short docs need fewer shared
     // shingles to collide, so an unaudited pipeline can silently strip
-    // short-form sources). Reuses the memoized component frame; dropped
+    // short-form sources). Builds on the component frame; dropped
     // = non-representative member (id ≠ cluster); one broadcast-sized
     // keyed join onto the bucketed doc table, output bounded by the
     // length-bucket domain.
     Q("q_dup_by_length",
       (s, d) => {
-        val cc = componentsCached(s, d)
+        val cc = components(s, d)
         Tables.df(s, d, "documents")
           .select(col("doc_id"), expr("n_chars div 100").as("len_bucket"))
           .join(cc.select(col("id").as("doc_id"),
@@ -346,7 +332,7 @@ object DedupQueries extends QuerySet {
     // Token-mass inflation from near-duplicates — the COMPUTE-WASTE
     // number next to q_dedup_rate's doc-count view: the fraction of
     // training tokens spent on non-representative duplicate docs
-    // (epochs over a template family). Reuses the memoized component
+    // (epochs over a template family). Builds on the component
     // frame; representative = the component-min id, so dup docs are
     // the id ≠ cluster rows; one keyed join onto per-doc token counts
     // and two 1-row aggregates (1-row crossJoin, the allowlisted
@@ -356,7 +342,7 @@ object DedupQueries extends QuerySet {
         val docs = Tables.df(s, d, "documents")
           .select(col("doc_id"),
             size(TextFunctions.tokens(col("text"))).cast("long").as("nt"))
-        val dup = componentsCached(s, d).filter(col("id") =!= col("cluster"))
+        val dup = components(s, d).filter(col("id") =!= col("cluster"))
           .join(docs.withColumnRenamed("doc_id", "id"), "id")
           .agg(coalesce(sum("nt"), lit(0L)).as("dup_tokens"),
             count(lit(1)).as("n_dup_docs"))
@@ -457,11 +443,9 @@ object DedupQueries extends QuerySet {
     // anti-joins the dropped ids
     Q("q_dedup_keep",
       (s, d) => {
-        // the registry reuses the memoized component table (the
-        // library path, Collection.dedupe, recomputes end to end and
-        // stays spec-covered in CollectionSpec); the anti-join below
-        // IS dedupe's pruning step
-        val dropped = componentsCached(s, d)
+        // the anti-join below IS dedupe's pruning step (the library
+        // path, Collection.dedupe, stays spec-covered in CollectionSpec)
+        val dropped = components(s, d)
           .filter(col("id") =!= col("cluster"))
           .select(col("id").as("doc_id"))
         Tables.df(s, d, "documents")
@@ -490,7 +474,7 @@ object DedupQueries extends QuerySet {
           TextFunctions.stopwordRatio4(split(col("text"), " ")).as("__q"))
         val w = org.apache.spark.sql.expressions.Window.partitionBy("cluster")
           .orderBy(col("__q").desc, col("id").asc)
-        val dropped = componentsCached(s, d).join(scored, "id")
+        val dropped = components(s, d).join(scored, "id")
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") =!= 1)
           .select(col("id").as("doc_id"))

@@ -4,26 +4,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One registered operator query: Spark implementation + optional DuckDB
   * oracle SQL over the same parquet tables (driver contract — see
-  * SparkEntry). The oracle is a THUNK evaluated per-query at dump
-  * time, not for the whole registry at construction: several oracles
-  * embed model state captured while their query ran (Pca.lastFit,
-  * SearchEval.capturedProbes) and fail loudly when that state is
-  * absent — a targeted Verify run dumps only the queries it ran, so
-  * the unrun queries' oracles must never render.
+  * SparkEntry). The oracle gets the same (session, dir) its query gets,
+  * so an oracle that embeds a fitted model (PCA components, BPE merges,
+  * search probes) refits it from the corpus rather than reading state
+  * another query left behind; every other oracle ignores both.
   */
 final class Q(
     val name: String,
     val fn: (SparkSession, String) => DataFrame,
-    oracleThunk: () => Option[String]) {
-  def oracle: Option[String] = oracleThunk()
-}
+    val oracle: (SparkSession, String) => Option[String])
 
 object Q {
-  /** By-name oracle keeps every existing `Q(name, fn, Some(sql))` call
-    * site source-compatible while deferring the SQL rendering.
+  /** An oracle that needs no corpus access: rendered lazily, arguments
+    * ignored, so every `Q(name, fn, Some(sql))` call site reads as is.
     */
   def apply(name: String, fn: (SparkSession, String) => DataFrame,
-      oracle: => Option[String]): Q = new Q(name, fn, () => oracle)
+      oracle: => Option[String]): Q = new Q(name, fn, (_, _) => oracle)
 }
 
 trait QuerySet {

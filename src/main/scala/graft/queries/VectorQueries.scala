@@ -4,6 +4,7 @@ import graft.Tables
 import graft.ann.{Knn, Matcher}
 import graft.ann.Matcher.MatchConfig
 import graft.index.{Search, TrigramIndexer}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Search & vector operators (SURVEY §2 rows 32-37, 43): trigram index,
@@ -15,6 +16,16 @@ object VectorQueries extends QuerySet {
 
   private val Dim = 64 // embeddings.embedding length (TESTDATA.md tables)
   private val Query = "spark query fast table scan"
+
+  // The PCA queries and the search evals each fit their model (PCA
+  // components, probe queries) from the corpus, and their oracles refit
+  // the same one from the same (session, dir): both fits are
+  // deterministic, so the oracle embeds exactly what its query used.
+  private def pcaFit(s: SparkSession, d: String) =
+    graft.ops.Pca.fit(Tables.df(s, d, "embeddings"), "embedding", k = 2)
+  private val ProbeIds = Seq(3L, 17L, 42L, 101L, 250L)
+  private def probes(s: SparkSession, d: String) = graft.index.SearchEval.probes(
+    Tables.df(s, d, "documents"), "doc_id", "text", ProbeIds, nTerms = 4)
 
   def all: Seq[Q] = Seq(
     Q("q_index_trigram",
@@ -777,11 +788,8 @@ object VectorQueries extends QuerySet {
     Q("q_kmeans",
       (s, d) => {
         val e = Tables.df(s, d, "embeddings")
-        // the canonical trainer ALWAYS fits (its bench entry measures
-        // training) and refreshes the memo q_silhouette reuses
         graft.ann.KMeans.assign(e, "vec_id", "embedding",
-          graft.ann.KMeans.fitRefresh(e, "vec_id", "embedding", k = 8,
-            maxIters = 3, corpusKey = s"$d:embeddings"))
+          graft.ann.KMeans.fit(e, "vec_id", "embedding", k = 8, maxIters = 3))
           .orderBy("vec_id")
       },
       Some(graft.ann.KMeans.assignDuckSql(
@@ -796,8 +804,7 @@ object VectorQueries extends QuerySet {
       (s, d) => {
         val e = Tables.df(s, d, "embeddings")
         graft.ann.KMeans.silhouette(e, "vec_id", "embedding",
-          graft.ann.KMeans.fitCached(e, "vec_id", "embedding", k = 8,
-            maxIters = 3, corpusKey = s"$d:embeddings"))
+          graft.ann.KMeans.fit(e, "vec_id", "embedding", k = 8, maxIters = 3))
           .orderBy("cluster")
       },
       Some(graft.ann.KMeans.silhouetteDuckSql(
@@ -812,8 +819,7 @@ object VectorQueries extends QuerySet {
     Q("q_cluster_purity",
       (s, d) => {
         val e = Tables.df(s, d, "embeddings")
-        val m = graft.ann.KMeans.fitCached(e, "vec_id", "embedding", k = 8,
-          maxIters = 3, corpusKey = s"$d:embeddings")
+        val m = graft.ann.KMeans.fit(e, "vec_id", "embedding", k = 8, maxIters = 3)
         val cl = graft.ann.KMeans.assign(e, "vec_id", "embedding", m)
           .join(e.select(col("vec_id"), col("label")), "vec_id")
           .groupBy("cluster", "label").agg(count(lit(1)).as("cnt"))
@@ -853,8 +859,7 @@ object VectorQueries extends QuerySet {
       (s, d) => {
         val e = Tables.df(s, d, "embeddings")
         graft.ann.KMeans.cellBalance(e, "vec_id", "embedding",
-          graft.ann.KMeans.fitCached(e, "vec_id", "embedding", k = 8,
-            maxIters = 3, corpusKey = s"$d:embeddings"))
+          graft.ann.KMeans.fit(e, "vec_id", "embedding", k = 8, maxIters = 3))
       },
       Some(graft.ann.KMeans.cellBalanceDuckSql(
         "embeddings", "vec_id", "embedding", k = 8, iters = 3, dim = Dim))),
@@ -877,42 +882,35 @@ object VectorQueries extends QuerySet {
     // pins orthonormality, variance ordering, claimed-vs-measured pc
     // variances, shuffle-free plan), but the distributed projection
     // pass IS — the oracle embeds the fitted components as literals
-    // (captured in Pca.lastFit while Verify ran the query) and
+    // (refit from the same corpus — the fit is deterministic) and
     // re-projects every row in DuckDB
-    Q("q_embed_pca",
+    new Q("q_embed_pca",
       (s, d) => {
         val e = Tables.df(s, d, "embeddings")
-        // canonical trainer: always fits (the bench entry measures the
-        // Σx/Σxxᵀ pass) and refreshes the memo q_embed_whiten reuses
-        graft.ops.Pca.project(e, "vec_id", "embedding",
-          graft.ops.Pca.fitRefresh(e, "embedding", k = 2,
-            corpusKey = s"$d:embeddings"))
+        graft.ops.Pca.project(e, "vec_id", "embedding", pcaFit(s, d))
           .select(col("vec_id"), round(col("pc1"), 4).as("pc1"),
             round(col("pc2"), 4).as("pc2"))
           .orderBy("vec_id")
       },
-      graft.ops.Pca.lastFit.map(m =>
-        graft.ops.Pca.projectDuckSql("embeddings", "vec_id", "embedding", m, round4 = true))),
+      (s, d) => Some(graft.ops.Pca.projectDuckSql("embeddings", "vec_id", "embedding",
+        pcaFit(s, d), round4 = true))),
 
     // PCA-whitened projection — unit-variance decorrelated coordinates,
     // the normalization retrieval pipelines apply before cosine /
     // Euclidean search so one dominant direction can't swamp the
     // metric. Map-only: the 1/sqrt(λ) scales are driver-computed
     // literals, identical in both engines; the oracle re-projects every
-    // row with the captured model (the q_embed_pca pattern).
-    Q("q_embed_whiten",
+    // row with a refit model (the q_embed_pca pattern).
+    new Q("q_embed_whiten",
       (s, d) => {
         val e = Tables.df(s, d, "embeddings")
-        graft.ops.Pca.projectWhitened(e, "vec_id", "embedding",
-          graft.ops.Pca.fitCached(e, "embedding", k = 2,
-            corpusKey = s"$d:embeddings"))
+        graft.ops.Pca.projectWhitened(e, "vec_id", "embedding", pcaFit(s, d))
           .select(col("vec_id"), round(col("w1"), 4).as("w1"),
             round(col("w2"), 4).as("w2"))
           .orderBy("vec_id")
       },
-      graft.ops.Pca.lastFit.map(m =>
-        graft.ops.Pca.projectWhitenedDuckSql(
-          "embeddings", "vec_id", "embedding", m, round4 = true))),
+      (s, d) => Some(graft.ops.Pca.projectWhitenedDuckSql("embeddings", "vec_id", "embedding",
+        pcaFit(s, d), round4 = true))),
 
     // Participation-ratio effective dimensionality — the embedding-
     // collapse diagnostic: PR = trace(C)²/‖C‖²_F = (Σλ)²/Σλ², no eigen
@@ -981,16 +979,15 @@ object VectorQueries extends QuerySet {
     // Retrieval-quality eval, the lexical twin of the ANN recallAtK:
     // self-retrieval MRR@10 — each probe doc's first 4 tokens query
     // the corpus, rank of the probe itself in the BM25 top-k; the
-    // oracle replays every probe's full search with the captured
-    // query literals (the Pca.lastFit pattern).
-    Q("q_search_mrr",
+    // oracle re-derives the probe queries from the same corpus and
+    // replays every probe's full search with them as literals.
+    new Q("q_search_mrr",
       (s, d) => graft.index.SearchEval.bm25SelfMrr(
         Tables.df(s, d, "documents"), "doc_id", "text",
-        probeIds = Seq(3L, 17L, 42L, 101L, 250L))
+        probeIds = ProbeIds, nTerms = 4)
         .orderBy("probe_id"),
-      Some(graft.index.SearchEval.bm25SelfMrrDuckSql(
-        "documents", "doc_id", "text", graft.index.SearchEval.capturedProbes(
-          "doc_id", "text", Seq(3L, 17L, 42L, 101L, 250L))))),
+      (s, d) => Some(graft.index.SearchEval.bm25SelfMrrDuckSql(
+        "documents", "doc_id", "text", probes(s, d)))),
 
     // Hybrid retrieval by reciprocal-rank fusion: BM25 + trigram-cosine
     // top-20 lists fused with 1/(60+rank) — the score-scale-free
@@ -1008,14 +1005,13 @@ object VectorQueries extends QuerySet {
     // overlap flags tokenization drift between the surfaces (and is
     // the signal hybrid retrieval would add value). Bounded probe
     // list, both retrievers replayed end-to-end by the oracle.
-    Q("q_search_agreement",
+    new Q("q_search_agreement",
       (s, d) => graft.index.SearchEval.retrieverAgreement(
         Tables.df(s, d, "documents"), "doc_id", "text",
-        probeIds = Seq(3L, 17L, 42L, 101L, 250L))
+        probeIds = ProbeIds, nTerms = 4)
         .orderBy("probe_id"),
-      Some(graft.index.SearchEval.retrieverAgreementDuckSql(
-        "documents", "doc_id", "text", graft.index.SearchEval.capturedProbes(
-          "doc_id", "text", Seq(3L, 17L, 42L, 101L, 250L))))),
+      (s, d) => Some(graft.index.SearchEval.retrieverAgreementDuckSql(
+        "documents", "doc_id", "text", probes(s, d)))),
 
     // The no-model bootstrap path END TO END: raw text -> feature-hash
     // vectors -> distributed Lloyd's -> topic assignment, with the
@@ -1028,8 +1024,7 @@ object VectorQueries extends QuerySet {
           Tables.df(s, d, "documents"), "doc_id", "text", dim = 16)
           .select(col("doc_id"), col("vec").cast("array<double>").as("vec"))
         graft.ann.KMeans.assign(emb, "doc_id", "vec",
-          graft.ann.KMeans.fitCached(emb, "doc_id", "vec", k = 6,
-            maxIters = 2, corpusKey = s"$d:hashembed16"))
+          graft.ann.KMeans.fit(emb, "doc_id", "vec", k = 6, maxIters = 2))
           .orderBy("doc_id")
       },
       Some("WITH hv AS (SELECT doc_id, vec FROM ("
@@ -1039,8 +1034,8 @@ object VectorQueries extends QuerySet {
             k = 6, iters = 2, dim = 16).stripPrefix("WITH "))),
 
     // Cluster-balanced diversity sample: equal per-cluster quota over
-    // the SAME fitted clustering as q_topic_cluster (fitCached shares
-    // the model) — the DataComp-style "cluster then sample evenly"
+    // the same fitted clustering as q_topic_cluster (same corpus, k and
+    // iterations; the fit is deterministic) — the DataComp-style "cluster then sample evenly"
     // subset builder. Assignment is the map-only argmin; the quota cut
     // is one bottom-k-struct partial aggregate on the bounded cluster
     // key (no corpus-wide rank window); the oracle replays the full
@@ -1051,8 +1046,7 @@ object VectorQueries extends QuerySet {
           Tables.df(s, d, "documents"), "doc_id", "text", dim = 16)
           .select(col("doc_id"), col("vec").cast("array<double>").as("vec"))
         graft.ops.Sampling.diverseSample(emb, "doc_id", "vec",
-          graft.ann.KMeans.fitCached(emb, "doc_id", "vec", k = 6,
-            maxIters = 2, corpusKey = s"$d:hashembed16"),
+          graft.ann.KMeans.fit(emb, "doc_id", "vec", k = 6, maxIters = 2),
           quota = 20)
           .orderBy("doc_id")
       },
@@ -1075,8 +1069,7 @@ object VectorQueries extends QuerySet {
         val emb = graft.text.HashEmbed.embed(docs, "doc_id", "text", dim = 16)
           .select(col("doc_id"), col("vec").cast("array<double>").as("vec"))
         val asg = graft.ann.KMeans.assign(emb, "doc_id", "vec",
-          graft.ann.KMeans.fitCached(emb, "doc_id", "vec", k = 6,
-            maxIters = 2, corpusKey = s"$d:hashembed16"))
+          graft.ann.KMeans.fit(emb, "doc_id", "vec", k = 6, maxIters = 2))
         asg.join(docs.select("doc_id", "text"), "doc_id")
           .select(col("cluster"),
             explode(graft.text.TextFunctions.tokens(lower(col("text")))).as("tok"))

@@ -111,53 +111,15 @@ object BpeTrain {
     } finally base.unpersist()
   }
 
-  /** Memoized [[fit]]: the query registry trains the same tokenizer
-    * for the whole BPE trio (train / encode / fertility) — refitting
-    * per query tripled the trio's bench cost for identical merges.
-    * Keyed by (corpus dir, column, nMerges) so a sweep over a
-    * different SF retrains; also refreshes [[lastFit]] for the
-    * oracle-side literal inlining.
-    */
-  def fitCached(df: DataFrame, textCol: String, nMerges: Int,
-                corpusKey: String): Seq[Merge] = synchronized {
-    val k = (corpusKey, textCol, nMerges)
-    if (fitCacheKey != k) {
-      fitCacheVal = fit(df, textCol, nMerges)
-      fitCacheKey = k
-    }
-    lastFit = fitCacheVal
-    fitCacheVal
-  }
-  @volatile private var fitCacheKey: (String, String, Int) = _
-  @volatile private var fitCacheVal: Seq[Merge] = Seq.empty
-
   /** [[fit]] as a DataFrame of (merge_rank, lhs, rhs, merged,
     * pair_count) — the trained artifact a tokenizer ships.
     */
-  def fitDF(spark: SparkSession, df: DataFrame, textCol: String, nMerges: Int,
-            corpusKey: String = null): DataFrame = {
+  def fitDF(spark: SparkSession, df: DataFrame, textCol: String, nMerges: Int): DataFrame = {
     import spark.implicits._
-    // fitDF ALWAYS trains (it is the training operator — its bench
-    // entry must measure the fit, not a cache hit); with a corpusKey
-    // it refreshes the memo so the encode/fertility queries reuse
-    // this fit instead of re-training
-    val merges = fit(df, textCol, nMerges)
-    if (corpusKey != null) synchronized {
-      fitCacheKey = (corpusKey, textCol, nMerges)
-      fitCacheVal = merges
-    }
-    lastFit = merges
-    merges
+    fit(df, textCol, nMerges)
       .map(m => (m.rank, m.lhs, m.rhs, m.lhs + m.rhs, m.count))
       .toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
   }
-
-  /** Merge list captured by the most recent [[fitDF]] call — lets the
-    * encode oracle (built after the queries run; see the
-    * SparkEntry.registry rebuild note) inline the trained merges as
-    * literals, the same pattern as Pca.lastFit.
-    */
-  @volatile var lastFit: Seq[Merge] = Seq.empty
 
   /** Segment `textCol` with an already-trained merge list: map-only —
     * one native pass per document ([[graft.functions.BpeApply]]: the

@@ -19,8 +19,8 @@ class SearchEvalSpec extends SparkSpec {
       .orderBy("probe_id").collect()
       .map(r => (r.getLong(0), r.getInt(2), r.getDouble(3)))
     out shouldBe Array((2L, 1, 1.0), (3L, 1, 1.0), (5L, 1, 1.0))
-    // captured probes match the docs' first 4 tokens
-    SearchEval.capturedProbes("doc_id", "text", Seq(2L, 3L, 5L)).map(_._2) shouldBe Seq(
+    // probes are the docs' first 4 tokens
+    SearchEval.probes(docs, "doc_id", "text", Seq(2L, 3L, 5L), nTerms = 4).map(_._2) shouldBe Seq(
       "cooking pasta with tomato",
       "distributed systems consensus algorithms",
       "garden soil preparation for")
@@ -40,7 +40,7 @@ class SearchEvalSpec extends SparkSpec {
       // openings: they must agree on at least the probe doc itself
       n should be >= 1
     }
-    SearchEval.capturedProbes("doc_id", "text", Seq(2L, 3L)).map(_._1) shouldBe Seq(2L, 3L)
+    SearchEval.probes(docs, "doc_id", "text", Seq(2L, 3L), nTerms = 4).map(_._1) shouldBe Seq(2L, 3L)
   }
 
   test("a shared opening can out-rank the probe; rr reflects the real rank") {
