@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.functions.VectorFunctions
+import graft.io.ParquetDir
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,11 +13,12 @@ import org.apache.spark.sql.functions._
   * probe I/O is corpus_size × nProbe / nCells, not a full scan, and
   * the pruning happens in the planner (spec-asserted), not at runtime.
   * Centroids use the same deterministic first-nCells-by-id pattern as
-  * [[Knn.ivfTopK]], stored beside the cells; both are bounded model
-  * state (nCells rows).
+  * [[Knn.ivfTopK]], stored beside the cells keyed by POSITION (see
+  * [[byPosition]]); both are bounded model state (nCells rows).
   *
   * Layout under `dir`: `centroids/` (cid, vec) and `cells/`
-  * (__cell=<cid>/ partitioned parquet of id, vec).
+  * (__cell=<cid>/ partitioned parquet of id, vec), each with the
+  * [[graft.io.ParquetDir]] schema sidecar probes read with.
   */
 object IvfIndex {
 
@@ -48,10 +50,9 @@ object IvfIndex {
     require(cent.nonEmpty, "cannot build an IVF index with no centroids")
     val spark = e.sparkSession
     import spark.implicits._
-    cent.toSeq.toDF("cid", "vec")
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    e.withColumn("__cell", Knn.ivfCellExpr(cent))
-      .write.mode("overwrite").partitionBy("__cell").parquet(s"$dir/cells")
+    val keyed = byPosition(cent)
+    ParquetDir.write(keyed.toSeq.toDF("cid", "vec"), s"$dir/centroids", "overwrite")
+    ParquetDir.write(withCell(e, keyed), s"$dir/cells", "overwrite", Seq("__cell"))
     // bounded metadata for listings (no spark job to answer "what
     // indexes exist with what geometry")
     java.nio.file.Files.writeString(
@@ -74,13 +75,34 @@ object IvfIndex {
     */
   def append(df: DataFrame, idCol: String, vecCol: String, dir: String): Unit = {
     val spark = df.sparkSession
-    val cent = spark.read.parquet(s"$dir/centroids")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+    val cent = centroids(spark, dir)
     require(cent.nonEmpty, s"no centroids at $dir — build the index first")
-    normalized(df, idCol, vecCol)
-      .withColumn("__cell", Knn.ivfCellExpr(cent))
-      .write.mode("append").partitionBy("__cell").parquet(s"$dir/cells")
+    ParquetDir.write(withCell(normalized(df, idCol, vecCol), cent), s"$dir/cells",
+      "append", Seq("__cell"))
   }
+
+  /** The codebook as an index stores it: cid = position, 0 until
+    * nCells in ascending-cid order (so the (nd, cid) tie-breaks, and
+    * with them every placement and probe, are unchanged). Cell
+    * directories are then small ints whatever the row ids are.
+    */
+  private[ann] def byPosition(cent: Array[(Long, Seq[Double])]): Array[(Long, Seq[Double])] =
+    cent.sortBy(_._1).zipWithIndex.map { case ((_, v), i) => (i.toLong, v) }
+
+  /** Cell column as INT, the type partition inference gives the
+    * `__cell=<cid>` directory names, so the declared schema matches it.
+    * An index built before centroids were stored by position keys its
+    * cells by row id, which may not fit an int: appends to it keep the
+    * long (that directory has no sidecar and reads through inference).
+    */
+  private def withCell(e: DataFrame, cent: Array[(Long, Seq[Double])]): DataFrame = {
+    val cell = Knn.ivfCellExpr(cent)
+    e.withColumn("__cell", if (cent.forall(_._1.isValidInt)) cell.cast("int") else cell)
+  }
+
+  private[ann] def centroids(spark: SparkSession, dir: String): Array[(Long, Seq[Double])] =
+    ParquetDir.read(spark, s"$dir/centroids")
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
 
   /** Exact cosine top-k within the `nProbe` cells whose centroids best
     * match the query vector. One partition-pruned scan ending in
@@ -88,13 +110,12 @@ object IvfIndex {
     */
   def probe(spark: SparkSession, dir: String, queryVec: Seq[Double], k: Int,
             nProbe: Int = 4): DataFrame = {
-    val cent = spark.read.parquet(s"$dir/centroids")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+    val cent = centroids(spark, dir)
     // shared with the scan-time tier: same dot fold, same -0.0
     // normalization, same (nd, cid) tie-break
     val probeCells = Knn.ivfProbeCells(cent, queryVec, nProbe)
     val qvLit = typedLit(queryVec)
-    spark.read.parquet(s"$dir/cells")
+    ParquetDir.read(spark, s"$dir/cells")
       .filter(col("__cell").isin(probeCells: _*)) // planner partition pruning
       .select(col("id"),
         round(VectorFunctions.cosine(col("__v"), qvLit), 4).as("score"))

@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.functions.VectorFunctions
+import graft.io.ParquetDir
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -58,10 +59,11 @@ object IvfPqIndex {
     val coarse = KMeans.fit(e, "id", "__v", k = nCells, maxIters = trainIters)
     // residuals: assign each row its cell (codegen argmin), broadcast
     // the nCells-row centroid frame, subtract element-wise
-    val centDf = coarse.centroids.toSeq.toDF("__cell", "__cv")
+    val cent = IvfIndex.byPosition(coarse.centroids)
+    val centDf = cent.toSeq.toDF("__cell", "__cv")
     // persisted: Pq.fit re-scans it m×iters times for the per-block
     // codebooks, then encode reads it once more
-    val resid = e.withColumn("__cell", Knn.ivfCellExpr(coarse.centroids))
+    val resid = e.withColumn("__cell", Knn.ivfCellExpr(cent))
       .join(broadcast(centDf), "__cell")
       .withColumn("__r", zip_with(col("__v"), col("__cv"), (a, b) => a - b))
       .persist()
@@ -69,13 +71,15 @@ object IvfPqIndex {
     val dsub = pq.dsub
     // cell rides through the encode projection — no re-attach join
     val codes = Pq.encode(resid, "id", "__r", pq, keep = Seq("__cell"))
-    centDf.select(col("__cell").as("cid"), col("__cv").as("vec"))
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    pq.codebooks.zipWithIndex.flatMap { case (palette, b) =>
+    ParquetDir.write(centDf.select(col("__cell").as("cid"), col("__cv").as("vec")),
+      s"$dir/centroids", "overwrite")
+    ParquetDir.write(pq.codebooks.zipWithIndex.flatMap { case (palette, b) =>
       palette.zipWithIndex.map { case (cv, i) => (b, i, cv.toSeq) }
-    }.toSeq.toDF("block", "idx", "vec")
-      .write.mode("overwrite").parquet(s"$dir/pq")
-    codes.write.mode("overwrite").partitionBy("__cell").parquet(s"$dir/cells")
+    }.toSeq.toDF("block", "idx", "vec"), s"$dir/pq", "overwrite")
+    // INT cell column (positions always fit): the type partition
+    // inference gives the directory names
+    ParquetDir.write(codes.withColumn("__cell", col("__cell").cast("int")),
+      s"$dir/cells", "overwrite", Seq("__cell"))
     resid.unpersist()
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_META"),
       s"$nCells\t$m\t$ks\t$dsub")
@@ -99,10 +103,9 @@ object IvfPqIndex {
             nProbe: Int = 4, rerank: Int = 0,
             raw: Option[(DataFrame, String, String)] = None): DataFrame = {
     val mt = meta(dir)
-    val cent = spark.read.parquet(s"$dir/centroids")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+    val cent = IvfIndex.centroids(spark, dir)
     val books: Array[Array[Array[Double]]] =
-      spark.read.parquet(s"$dir/pq").collect()
+      ParquetDir.read(spark, s"$dir/pq").collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
         .groupBy(_._1).toArray.sortBy(_._1)
         .map(_._2.sortBy(_._2).map(_._3))
@@ -125,7 +128,7 @@ object IvfPqIndex {
       when(col("__cell") === probeCells.head, adcFor(probeCells.head))) {
       (acc, c) => acc.when(col("__cell") === c, adcFor(c))
     }
-    val scanned = spark.read.parquet(s"$dir/cells")
+    val scanned = ParquetDir.read(spark, s"$dir/cells")
       .filter(col("__cell").isin(probeCells: _*)) // planner partition pruning
       .select(col("id"), adc.as("adc"))
     val nCand = math.max(k, rerank)

@@ -1,9 +1,11 @@
 package graft.api
 
+import graft.io.ParquetDir
 import graft.query.Filter
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** The 100 TB CRUD path: a collection hash-bucketed by primary key,
@@ -15,6 +17,7 @@ import scala.jdk.CollectionConverters._
   * {{{
   *   root/b_<bucket>/v_<version>/   bucket snapshot (parquet)
   *   root/_MANIFEST_<version>       lines "bucket,bucketVersion"
+  *   root/_SCHEMA_<version>         StructType.json every bucket reads with
   *   root/_CURRENT                  current manifest version (atomic swap)
   * }}}
   *
@@ -57,6 +60,34 @@ class BucketedParquetCollection(
 
   private def bucketDir(b: Int, bv: Int) = s"$root/b_$b/v_$bv"
 
+  private def schemaFile(v: Int) = Paths.get(root, s"_SCHEMA_$v")
+
+  /** The schema manifest `v` declares: the union of its buckets'
+    * schemas, recorded at commit. A manifest written before schema
+    * files existed gets one the first time it is read: the union of
+    * each bucket's inferred schema (one inference per bucket, paid
+    * once — a manifest never changes, so the file is written beside it
+    * and every later read finds it).
+    */
+  private def schema(v: Int): StructType =
+    ParquetDir.loadSchema(schemaFile(v)).getOrElse {
+      val s = manifest(v).toSeq.sortBy(_._1)
+        .map { case (b, bv) => ParquetDir.read(spark, None, Seq(bucketDir(b, bv))).schema }
+        .reduce(ParquetDir.union)
+      val tmp = Paths.get(root, s"_SCHEMA_$v.tmp${java.util.UUID.randomUUID}")
+      ParquetDir.saveSchema(tmp, s)
+      Files.move(tmp, schemaFile(v), StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+      s
+    }
+
+  /** Buckets as ONE multi-path scan relation with their manifest's
+    * declared schema.
+    */
+  private def read(schema: StructType, buckets: Seq[(Int, Int)]): DataFrame =
+    ParquetDir.read(spark, Some(schema),
+      buckets.sortBy(_._1).map { case (b, bv) => bucketDir(b, bv) })
+
   /** Bucket of a key value — Spark's murmur3 `hash`, non-negative. */
   def bucketCol(key: Column): Column = pmod(hash(key), lit(nBuckets))
 
@@ -76,16 +107,18 @@ class BucketedParquetCollection(
     * multi-path scan relation — not a union of per-bucket reads, which
     * costs O(nBuckets) schema reads and an nBuckets-way union in every
     * plan (at 1000 buckets the plan itself becomes the bottleneck).
-    * `mergeSchema` WIDENS tolerance relative to the strict
-    * unionByName this replaced: a bucket version written before a
-    * column existed now reads as null for it instead of failing the
-    * union — schema drift surfaces as nulls, not as a loud error.
+    * Every bucket reads with the manifest's DECLARED schema: the union
+    * of the schemas its buckets were written with, fixed at commit (a
+    * commit whose rows cannot merge with it fails before writing). A
+    * bucket version written before a column existed reads as null for
+    * it — schema drift surfaces as nulls, not as a loud error — and
+    * no read opens a footer to find the schema.
     */
   def df: DataFrame = {
-    val m = manifest(currentVersion)
+    val v = currentVersion
+    val m = manifest(v)
     require(m.nonEmpty, s"collection $name has no data at $root")
-    val paths = m.toSeq.sortBy(_._1).map { case (b, bv) => bucketDir(b, bv) }
-    spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    read(schema(v), m.toSeq)
   }
 
   def count(): Long = df.count()
@@ -93,16 +126,18 @@ class BucketedParquetCollection(
   def find(where: Filter = Filter.True): DataFrame =
     new Collection(name, df).find(where)
 
-  /** Point lookup reading ONLY the key's bucket directory. */
+  /** Point lookup reading ONLY the key's bucket directory; the pk type
+    * comes from the declared schema, so building the lookup runs no job.
+    */
   def findByKey(value: Any): DataFrame = {
-    val m = manifest(currentVersion)
+    val v = currentVersion
+    val m = manifest(v)
     if (m.isEmpty) return df.limit(0) // df throws a clearer error
-    // schema resolution only — no scan job
-    val pkType = spark.read.parquet(bucketDir(m.head._1, m.head._2)).schema(pk).dataType
+    val declared = schema(v)
+    val pkType = declared(pk).dataType
     val b = bucketOfValue(value, pkType)
     m.get(b) match {
-      case Some(bv) => spark.read.parquet(bucketDir(b, bv))
-        .filter(col(pk) === lit(value).cast(pkType))
+      case Some(bv) => read(declared, Seq(b -> bv)).filter(col(pk) === lit(value).cast(pkType))
       case None => df.limit(0)
     }
   }
@@ -113,6 +148,15 @@ class BucketedParquetCollection(
     */
   private def commitBuckets(rows: DataFrame, touched: Seq[Int]): Unit = {
     val v = currentVersion + 1
+    val old = manifest(currentVersion)
+    // the schema manifest v declares, settled before anything is
+    // written: the staged rows' own when they replace every bucket,
+    // else their union with the current one (untouched buckets keep
+    // reading through it)
+    val stagedSchema = ParquetDir.readBack(rows.drop("__b").schema).get
+    val declared =
+      if ((old.keySet -- touched).isEmpty) stagedSchema
+      else ParquetDir.union(schema(currentVersion), stagedSchema)
     val stage = Paths.get(root, s"_stage_$v")
     // A leftover stage dir is pre-commit garbage by construction
     // (_CURRENT never pointed at it): a crash between staging and
@@ -120,7 +164,6 @@ class BucketedParquetCollection(
     deleteTree(stage)
     rows.write.mode("errorifexists").partitionBy("__b")
       .parquet(stage.toString)
-    val old = manifest(currentVersion)
     // Move EVERY staged bucket dir into place as that bucket's version
     // v — derived from the staging output itself, unioned with
     // `touched` so a touched bucket with NO staged rows (fully emptied
@@ -142,6 +185,7 @@ class BucketedParquetCollection(
     deleteTree(stage)
     val mf = next.toSeq.sorted.map { case (b, bv) => s"$b,$bv" }.mkString("\n")
     Files.writeString(Paths.get(root, s"_MANIFEST_$v"), mf)
+    ParquetDir.saveSchema(schemaFile(v), declared)
     val tmp = Paths.get(root, s"_CURRENT.tmp$v")
     Files.writeString(tmp, v.toString)
     Files.move(tmp, currentFile, StandardCopyOption.ATOMIC_MOVE,
@@ -163,14 +207,7 @@ class BucketedParquetCollection(
     */
   private def alignPk(rows: DataFrame): DataFrame =
     if (currentVersion < 0) rows
-    else {
-      // pk type from ONE bucket's footer — constructing the full
-      // snapshot relation just to read a column type would list every
-      // bucket directory
-      val m = manifest(currentVersion)
-      val t = spark.read.parquet(bucketDir(m.head._1, m.head._2)).schema(pk).dataType
-      rows.withColumn(pk, col(pk).cast(t))
-    }
+    else rows.withColumn(pk, col(pk).cast(schema(currentVersion)(pk).dataType))
 
   private def withBucket(rows: DataFrame): DataFrame =
     rows.withColumn("__b", bucketCol(col(pk)))
@@ -182,14 +219,14 @@ class BucketedParquetCollection(
     withBucket(rows).select("__b").distinct().collect().map(_.getInt(0)).toSeq.sorted
 
   /** Current content of the given buckets only — one multi-path scan
-    * (same rationale as [[df]]).
+    * with the declared schema (same rationale as [[df]]).
     */
   private def bucketsDf(bs: Seq[Int]): DataFrame = {
-    val m = manifest(currentVersion)
+    val v = currentVersion
+    val m = manifest(v)
     val present = bs.filter(m.contains)
     if (present.isEmpty) df.limit(0)
-    else spark.read.option("mergeSchema", "true")
-      .parquet(present.sorted.map(b => bucketDir(b, m(b))): _*)
+    else read(schema(v), present.map(b => b -> m(b)))
   }
 
   /** Replace the whole collection (rewrites every bucket). */
@@ -268,8 +305,9 @@ class BucketedParquetCollection(
       touched)
   }
 
-  /** Remove bucket versions and manifests not referenced by the current
-    * manifest (old readers' snapshots disappear — run when quiesced).
+  /** Remove bucket versions, manifests and their schema files not
+    * referenced by the current manifest (old readers' snapshots
+    * disappear — run when quiesced).
     */
   def vacuum(): Unit = {
     val v = currentVersion
@@ -279,7 +317,8 @@ class BucketedParquetCollection(
     val ls = Files.list(dir)
     try ls.forEach { p =>
       val n = p.getFileName.toString
-      if (n.startsWith("_MANIFEST_") && n != s"_MANIFEST_$v")
+      if ((n.startsWith("_MANIFEST_") && n != s"_MANIFEST_$v") ||
+          (n.startsWith("_SCHEMA_") && n != s"_SCHEMA_$v"))
         Files.delete(p)
       else if (n.startsWith("_stage_")) // crash leftovers, never published
         deleteTree(p)

@@ -3,6 +3,7 @@ package graft.api
 import graft.query.{Facets, Filter}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Sort key: `"col"` ascending, `"-col"` descending (reference sort_by is
   * a list of column names — reference: src/linkml_store/api/queries.py:26).
@@ -92,7 +93,8 @@ class Collection(val name: String, val df: DataFrame) {
         // ONE batched pass, collected once (bounded: <= limit rows per
         // slot, reference facet_counts are dicts too) and split
         // driver-side — lazily splitting the batched DataFrame would
-        // re-execute the whole scan once per slot.
+        // re-execute the whole scan once per slot. Each slot is a local
+        // relation, so collecting it runs no job.
         val all = Facets.facetCountsBatched(df, q.where, q.facetSlots).collect()
         val schema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("facet_value",
@@ -102,8 +104,7 @@ class Collection(val name: String, val df: DataFrame) {
         q.facetSlots.map { s =>
           val rows = all.filter(_.getString(0) == s)
             .map(r => org.apache.spark.sql.Row(r.get(1), r.getLong(2)))
-          s -> spark.createDataFrame(
-            spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+          s -> spark.createDataFrame(rows.toSeq.asJava, schema)
         }.toMap
       }
     QueryResult(numRows, rows, facets)
@@ -129,7 +130,6 @@ class Collection(val name: String, val df: DataFrame) {
     * time instead, so the driver holds at most a partition).
     */
   def findIter(where: Filter = Filter.True): Iterator[org.apache.spark.sql.Row] = {
-    import scala.jdk.CollectionConverters._
     find(where).toLocalIterator().asScala
   }
 

@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.io.ParquetDir
 import graft.query.Filter
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -35,11 +36,13 @@ class ParquetCollection(
   private def currentVersion: Int =
     if (Files.exists(currentFile)) Files.readString(currentFile).trim.toInt else -1
 
-  /** The active snapshot as a DataFrame (empty schema error if never written). */
+  /** The active snapshot as a DataFrame (error if never written), read
+    * with the schema its commit recorded — no inference job.
+    */
   def df: DataFrame = {
     val v = currentVersion
     require(v >= 0, s"collection $name has no data at $root")
-    spark.read.parquet(s"$root/v_$v")
+    ParquetDir.read(spark, s"$root/v_$v")
   }
 
   def count(): Long = df.count()
@@ -53,10 +56,9 @@ class ParquetCollection(
     // Plans referencing the current snapshot read the OLD version dir
     // while writing the new one — no read-modify-write hazard.
     // Partitioned layout => reads with a partition-column predicate
-    // prune directories at planning time (PartitionFilters).
-    val w = next.write.mode("errorifexists")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(s"$root/v_$v")
+    // prune directories at planning time (PartitionFilters). The
+    // version's schema sidecar lands before the swap publishes it.
+    ParquetDir.write(next, s"$root/v_$v", "errorifexists", partitionBy)
     val tmp = Paths.get(root, s"_CURRENT.tmp$v")
     Files.createDirectories(Paths.get(root))
     Files.writeString(tmp, v.toString)

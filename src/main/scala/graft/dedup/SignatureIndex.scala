@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.io.ParquetDir
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,10 +32,10 @@ object SignatureIndex {
 
   def build(df: DataFrame, idCol: String, textCol: String, dir: String,
             k: Int = 8, w: Int = 3, bands: Int = 4): Unit = {
-    MinHash.bandRows(df, idCol, textCol, k, w, bands)
-      .write.mode("overwrite").parquet(s"$dir/bands")
-    MinHash.shingleSets(df, idCol, textCol, w)
-      .write.mode("overwrite").parquet(s"$dir/shingles")
+    ParquetDir.write(MinHash.bandRows(df, idCol, textCol, k, w, bands), s"$dir/bands",
+      "overwrite")
+    ParquetDir.write(MinHash.shingleSets(df, idCol, textCol, w), s"$dir/shingles",
+      "overwrite")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_META"),
       s"$k\t$w\t$bands")
   }
@@ -52,10 +53,10 @@ object SignatureIndex {
     */
   def append(df: DataFrame, idCol: String, textCol: String, dir: String): Unit = {
     val mt = meta(dir)
-    MinHash.bandRows(df, idCol, textCol, mt.k, mt.w, mt.bands)
-      .write.mode("append").parquet(s"$dir/bands")
-    MinHash.shingleSets(df, idCol, textCol, mt.w)
-      .write.mode("append").parquet(s"$dir/shingles")
+    ParquetDir.write(MinHash.bandRows(df, idCol, textCol, mt.k, mt.w, mt.bands),
+      s"$dir/bands", "append")
+    ParquetDir.write(MinHash.shingleSets(df, idCol, textCol, mt.w), s"$dir/shingles",
+      "append")
   }
 
   /** Near-dup pairs of `delta` against the PERSISTED corpus index:
@@ -69,9 +70,9 @@ object SignatureIndex {
                  maxBucket: Int = MinHash.DefaultMaxBucket,
                  scope: graft.api.CacheScope = graft.api.CacheScope.global): DataFrame = {
     val mt = meta(dir)
-    val corpusBands = spark.read.parquet(s"$dir/bands")
+    val corpusBands = ParquetDir.read(spark, s"$dir/bands")
       .toDF(idCol, "band", "bkey")
-    val corpusSh = spark.read.parquet(s"$dir/shingles").toDF(idCol, "sh")
+    val corpusSh = ParquetDir.read(spark, s"$dir/shingles").toDF(idCol, "sh")
     crossPairs(corpusBands, corpusSh, delta, idCol, textCol,
       mt.k, mt.w, mt.bands, threshold, maxBucket, scope)
   }

@@ -1,5 +1,6 @@
 package graft.index
 
+import graft.io.ParquetDir
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,6 +18,8 @@ import org.apache.spark.sql.functions._
   *     global stats are the SUM over rows, so ingest never
   *     read-modify-writes shared state.
   *   - `_BUCKETS` — bucket count, pinned so appends and probes agree.
+  *   Both directories carry the [[graft.io.ParquetDir]] schema
+  *   sidecar, so a probe resolves them without an inference job.
   *
   * Scale shape (100 TB): a probe reads ONLY the query terms' bucket
   * partitions — planner partition pruning on `__bkt` (spec-asserted),
@@ -46,9 +49,9 @@ object Bm25Index {
       .groupBy("id", "dl", "term")
       .agg(count(lit(1)).cast("int").as("tf"))
       // INT partition values: partition-column inference reads the
-      // directory names back as int, and a long-vs-int comparison in
-      // the probe filter would cast the partition column and defeat
-      // planner pruning
+      // directory names back as int (so the declared schema can say
+      // so), and a long-vs-int comparison in the probe filter would
+      // cast the partition column and defeat planner pruning
       .withColumn("__bkt",
         pmod(graft.text.TextFunctions.portableHash60(col("term")),
           lit(nBuckets.toLong)).cast("int"))
@@ -60,9 +63,9 @@ object Bm25Index {
 
   def build(df: DataFrame, idCol: String, textCol: String, dir: String,
       nBuckets: Int = 64): Unit = {
-    postings(df, idCol, textCol, nBuckets)
-      .write.mode("overwrite").partitionBy("__bkt").parquet(s"$dir/postings")
-    metaRow(df, idCol, textCol).write.mode("overwrite").parquet(s"$dir/meta")
+    ParquetDir.write(postings(df, idCol, textCol, nBuckets), s"$dir/postings",
+      "overwrite", Seq("__bkt"))
+    ParquetDir.write(metaRow(df, idCol, textCol), s"$dir/meta", "overwrite")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "_BUCKETS"), nBuckets.toString)
   }
@@ -75,9 +78,9 @@ object Bm25Index {
     */
   def append(df: DataFrame, idCol: String, textCol: String, dir: String): Unit = {
     val nBuckets = bucketCount(dir)
-    postings(df, idCol, textCol, nBuckets)
-      .write.mode("append").partitionBy("__bkt").parquet(s"$dir/postings")
-    metaRow(df, idCol, textCol).write.mode("append").parquet(s"$dir/meta")
+    ParquetDir.write(postings(df, idCol, textCol, nBuckets), s"$dir/postings",
+      "append", Seq("__bkt"))
+    ParquetDir.write(metaRow(df, idCol, textCol), s"$dir/meta", "append")
   }
 
   def bucketCount(dir: String): Int = {
@@ -99,12 +102,12 @@ object Bm25Index {
     val nBuckets = bucketCount(dir)
     val buckets = terms.map(t =>
       math.floorMod(TrigramIndexer.hash60(t), nBuckets.toLong).toInt).distinct
-    val hits = spark.read.parquet(s"$dir/postings")
+    val hits = ParquetDir.read(spark, s"$dir/postings")
       .filter(col("__bkt").isin(buckets: _*)) // planner partition pruning
       .filter(col("term").isin(terms: _*))    // pushed into the pruned scan
     // global stats: 1-row meta sum + |terms| document frequencies from
     // the pruned read — both bounded collects (model state, not data)
-    val Array(nDocs, sumDl) = spark.read.parquet(s"$dir/meta")
+    val Array(nDocs, sumDl) = ParquetDir.read(spark, s"$dir/meta")
       .agg(sum("n_docs"), sum("sum_dl")).collect()(0)
       .toSeq.map(v => v.asInstanceOf[Long].toDouble).toArray
     val dfByTerm: Map[String, Long] = hits.groupBy("term")

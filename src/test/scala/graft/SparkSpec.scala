@@ -23,6 +23,30 @@ object SparkTestSession {
 trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkTestSession.spark
 
+  /** `body`'s result and the number of Spark jobs it submitted from
+    * this thread: it runs under a fresh job group, then one sentinel job
+    * in that group marks when the status store has caught up (listener
+    * events arrive in order), so a job is never missed for event lag.
+    */
+  protected def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      val sentinel = sc.parallelize(Seq(1), 1).countAsync()
+      scala.concurrent.Await.ready(sentinel, scala.concurrent.duration.Duration.Inf)
+      val sid = sentinel.jobIds.head
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      def ids = sc.statusTracker.getJobIdsForGroup(group)
+      while (!ids.contains(sid)) {
+        require(System.nanoTime < deadline, s"status store never saw job $sid")
+        Thread.sleep(5)
+      }
+      (out, ids.count(_ != sid))
+    } finally sc.clearJobGroup()
+  }
+
   /** Every node of a physical plan, descending through the boundaries
     * `TreeNode.collect` treats as leaves: the AQE wrapper (present
     * whenever the plan has exchanges — a naive collect over

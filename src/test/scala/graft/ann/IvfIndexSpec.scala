@@ -52,6 +52,19 @@ class IvfIndexSpec extends SparkSpec {
       .size should be <= 4
   }
 
+  test("probe reads centroids and cells with their declared schemas: no inference job") {
+    val root = java.nio.file.Files.createTempDirectory("ivf_jobs").toString
+    val coll = new graft.api.ParquetCollection(spark, root, "emb")
+    coll.replace(emb)
+    coll.attachVectorIndex("vec_id", "embedding", nCells = 16, trained = false)
+    val dir = s"$root/_vindex_embedding"
+    Seq("centroids", "cells").foreach { d =>
+      jobsIn(graft.io.ParquetDir.read(spark, s"$dir/$d"))._2 shouldBe 0
+    }
+    // what remains is the bounded codebook collect
+    jobsIn(IvfIndex.probe(spark, dir, Seq.fill(64)(0.1), k = 5))._2 shouldBe 1
+  }
+
   test("append ingests a delta without touching the standing cells; probe equals a rebuild") {
     import scala.jdk.CollectionConverters._
     def filesUnder(p: String): Set[String] =
@@ -87,6 +100,63 @@ class IvfIndexSpec extends SparkSpec {
     gotA shouldBe gotB
     // the delta's own neighborhood is findable through the probe
     gotA.map(_._1) should contain(450L)
+  }
+
+  test("ids beyond Int.MaxValue: build, append and probe; cells stay int") {
+    val shift = 3000000000L
+    val big = emb.withColumn("vec_id", col("vec_id") + shift)
+    val qv = emb.filter(col("vec_id") === 450L)
+      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
+    def probe(dir: String, k: Int = 10) = IvfIndex.probe(spark, dir, qv, k, nProbe = 4)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+    // the default quantizer's centroids are rows with large ids; the
+    // cells are keyed by their positions, so a probe still matches the
+    // scan-time tier on the same ids
+    val full = java.nio.file.Files.createTempDirectory("ivf_big").toString
+    IvfIndex.build(big, "vec_id", "embedding", nCells = 16, dir = full)
+    spark.read.parquet(s"$full/cells").schema("__cell").dataType shouldBe
+      org.apache.spark.sql.types.IntegerType
+    jobsIn(graft.io.ParquetDir.read(spark, s"$full/cells"))._2 shouldBe 0
+    val want = Knn.ivfTopK(big, "vec_id", "embedding", queryId = 450L + shift, k = 10,
+      nCells = 16, nProbe = 4).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    probe(full, k = 11).filter(_._1 != 450L + shift).take(10) shouldBe want
+
+    val dirA = java.nio.file.Files.createTempDirectory("ivf_big_app").toString
+    IvfIndex.build(big.filter(col("vec_id") < shift + 400L), "vec_id", "embedding",
+      nCells = 16, dir = dirA)
+    IvfIndex.append(big.filter(col("vec_id") >= shift + 400L), "vec_id", "embedding", dirA)
+    graft.io.ParquetDir.read(spark, s"$dirA/cells").schema shouldBe
+      spark.read.parquet(s"$dirA/cells").schema
+    val dirB = java.nio.file.Files.createTempDirectory("ivf_big_reb").toString
+    IvfIndex.build(big, "vec_id", "embedding", IvfIndex.centroids(spark, dirA), dirB)
+    probe(dirA) shouldBe probe(dirB)
+    probe(dirA).map(_._1) should contain(450L + shift)
+  }
+
+  test("an index whose cells are keyed by large row ids still appends and probes") {
+    // the layout before centroids were stored by position: cid = row id,
+    // long cell directories, no schema sidecars
+    val shift = 3000000000L
+    val e = emb.select((col("vec_id") + shift).as("id"),
+      col("embedding").cast("array<double>").as("__v"))
+    val cent = e.orderBy("id").limit(16).collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+    val dir = java.nio.file.Files.createTempDirectory("ivf_legacy").toString
+    import spark.implicits._
+    cent.toSeq.toDF("cid", "vec").write.parquet(s"$dir/centroids")
+    e.filter(col("id") < shift + 400L).withColumn("__cell", Knn.ivfCellExpr(cent))
+      .write.partitionBy("__cell").parquet(s"$dir/cells")
+    IvfIndex.append(emb.filter(col("vec_id") >= 400L)
+      .withColumn("vec_id", col("vec_id") + shift), "vec_id", "embedding", dir)
+    val qv = emb.filter(col("vec_id") === 450L)
+      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
+    val got = IvfIndex.probe(spark, dir, qv, k = 10, nProbe = 4)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val rebuilt = java.nio.file.Files.createTempDirectory("ivf_legacy_reb").toString
+    IvfIndex.build(e, "id", "__v", cent, rebuilt)
+    got shouldBe IvfIndex.probe(spark, rebuilt, qv, k = 10, nProbe = 4)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "cells", "_SCHEMA")) shouldBe false
   }
 
   test("insertIndexed appends corpus + index together and keeps probes fresh") {

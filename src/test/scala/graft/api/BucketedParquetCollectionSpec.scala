@@ -89,6 +89,39 @@ class BucketedParquetCollectionSpec extends SparkSpec {
     c.findByKey(-5).collect() shouldBe empty
   }
 
+  test("df and findByKey read with the declared schema: building them submits no job") {
+    val root = tmpDir()
+    val c = new BucketedParquetCollection(spark, root, "t", "id", nBuckets = 8)
+    c.replace((1 to 100).map(i => (i, s"n$i")).toDF("id", "name"))
+    c.upsert(Seq((7, "SEVEN")).toDF("id", "name"))
+    val (all, dfJobs) = jobsIn(c.df)
+    dfJobs shouldBe 0
+    all.count() shouldBe 100
+    val (hit, keyJobs) = jobsIn(c.findByKey(7))
+    keyJobs shouldBe 0
+    hit.collect().map(_.getString(1)) shouldBe Array("SEVEN")
+  }
+
+  test("a widening insert: untouched buckets read null for the new column") {
+    val root = tmpDir()
+    val c = new BucketedParquetCollection(spark, root, "t", "id", nBuckets = 8)
+    c.replace((1 to 40).map(i => (i, s"n$i")).toDF("id", "name"))
+    val before = bucketVersions(root)
+    c.insert(Seq((1001, "wide", 3.5)).toDF("id", "name", "score"))
+    val after = bucketVersions(root)
+    val touched = after.collect { case (b, vs) if vs != before.getOrElse(b, Set.empty[String]) => b }.toSet
+    touched.size shouldBe 1
+    // the untouched buckets' files predate the column, yet every read
+    // of the snapshot carries it
+    c.df.columns shouldBe Array("id", "name", "score")
+    val byId = c.df.collect().map(r => r.getInt(0) -> Option(r.get(2))).toMap
+    byId.size shouldBe 41
+    byId(1001) shouldBe Some(3.5)
+    (1 to 40).foreach(i => byId(i) shouldBe None)
+    c.findByKey(3).collect().head.isNullAt(2) shouldBe true
+    c.findByKey(1001).collect().head.getDouble(2) shouldBe 3.5
+  }
+
   test("findByKey casts the lookup literal to the pk type (Int vs bigint pk)") {
     val root = tmpDir()
     val c = new BucketedParquetCollection(spark, root, "t", "id", nBuckets = 8)
@@ -185,6 +218,10 @@ class BucketedParquetCollectionSpec extends SparkSpec {
     c.vacuum()
     // every surviving version dir is the one the manifest references
     bucketVersions(root).values.foreach(_.size shouldBe 1)
+    // and only the live manifest and its schema file are left
+    val meta = Files.list(Paths.get(root)).iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.startsWith("_MANIFEST_") || n.startsWith("_SCHEMA_")).toSet
+    meta shouldBe Set("_MANIFEST_2", "_SCHEMA_2")
     c.df.count() shouldBe 20
     c.findByKey(1).collect().head.getInt(1) shouldBe 100
   }

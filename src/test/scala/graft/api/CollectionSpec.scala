@@ -38,6 +38,20 @@ class CollectionSpec extends SparkSpec {
     f shouldBe Map("open" -> 3L, "closed" -> 2L)
   }
 
+  test("each facet slot holds its batched rows and collects without a job") {
+    val slots = Seq("status", "amount")
+    val where = Filter.eq("status", "open")
+    val r = coll.query(Query(where = where, facetSlots = slots))
+    val batched = coll.facetsBatched(slots, where).collect()
+      .map(x => (x.getString(0), x.getString(1), x.getLong(2))).sorted
+    val perSlot = slots.flatMap { s =>
+      val (rows, jobs) = jobsIn(r.facetCounts(s).collect())
+      jobs shouldBe 0
+      rows.map(x => (s, x.getString(0), x.getLong(1)))
+    }.sorted
+    perSlot shouldBe batched
+  }
+
   test("find with Mongo map") {
     coll.find(Map("amount" -> Map("$gte" -> 150.0)))
       .select("id").as[Int].collect().sorted shouldBe Array(2, 4, 5)

@@ -90,6 +90,14 @@ class ParquetCollectionSpec extends SparkSpec {
     c.count() shouldBe 4 // still readable
   }
 
+  test("df reads the snapshot with its declared schema: building it submits no job") {
+    val c = freshColl()
+    c.insert(Seq((4, "dave", 20)).toDF("id", "name", "age"))
+    val (df, jobs) = jobsIn(c.df)
+    jobs shouldBe 0
+    df.count() shouldBe 4
+  }
+
   test("partitioned collection prunes partitions on partition-column filters") {
     val dir = Files.createTempDirectory("graft-crud-part").toString
     val c = new ParquetCollection(spark, dir, "orders", partitionBy = Seq("status"))

@@ -54,6 +54,17 @@ class Bm25IndexSpec extends SparkSpec {
       .size should be <= 2
   }
 
+  test("search reads postings and meta with their declared schemas: no inference job") {
+    val dir = java.nio.file.Files.createTempDirectory("bm25_jobs").toString
+    Bm25Index.build(docs, "doc_id", "text", dir, nBuckets = 64)
+    Seq("postings", "meta").foreach { d =>
+      jobsIn(graft.io.ParquetDir.read(spark, s"$dir/$d"))._2 shouldBe 0
+    }
+    // what remains are the two bounded collects (meta sum, document
+    // frequencies), each a shuffle stage plus its result stage
+    jobsIn(Bm25Index.search(spark, dir, "table scan merge", k = 10))._2 shouldBe 4
+  }
+
   test("append ingests a delta without touching standing postings; search equals a rebuild") {
     import scala.jdk.CollectionConverters._
     def filesUnder(p: String): Set[String] =
